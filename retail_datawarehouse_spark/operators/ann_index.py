@@ -105,6 +105,20 @@ it into a compaction trigger. Deletion is BY ID — re-appending a
 tombstoned id before a compaction stays masked (documented; fresh ids
 are the re-admission path).
 
+SERVING STATE is per generation: a generation's centroid and codebook
+sidecars are write-once, so everything serving derives from them — the
+K / ``_coarse`` / ``_metric`` scalars, the packed flat and two-level
+routing rows (``similarity._pack_cells``), the decode row (sorted
+codebook + cell-indexed centroids) and the cell table's schema — is a
+``QuantizerState`` built once per generation by ``open_ivf_index``
+(cached when persisted) and kept by ``IvfIndexHandle.refresh`` until
+the generation moves. A wave through a persisted handle therefore
+packs nothing and infers no schema; what stays per-wave is what can
+change inside a generation: the tombstone listing (re-checked at each
+refresh) and the cell-file listing (each call's fresh relation, so
+appends are served by the next call). Handle-less calls build the
+state once per call.
+
 Incremental add is the FAISS `add`-after-`train` discipline: arriving
 vectors are assigned against the STORED (frozen) centroids — and, for
 a PQ index, encoded against the STORED (frozen) codebook — a map-only
@@ -124,7 +138,6 @@ mode) over the grown corpus.
 from __future__ import annotations
 
 import os
-import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -150,6 +163,8 @@ from retail_datawarehouse_spark.operators.similarity import (
     _ivf_index_over,
     _nearest_cell,
     _norm2_expr,
+    _group_cells,
+    _pack_cells,
     _per_query_topk,
     _pq_adc_cosine,
     _pq_codebook,
@@ -157,6 +172,7 @@ from retail_datawarehouse_spark.operators.similarity import (
     _pq_train_sample,
     _residual_codebook,
     _residualize,
+    _route_cells,
     _train_rank_col,
 )
 
@@ -274,7 +290,7 @@ def _auto_index(
     folds ~√k + k/√k per row instead. Routing is approximate at group
     boundaries, and the approximation is only sound when applied
     SYMMETRICALLY (r8): appends and small-nprobe probes go through the
-    same routing (``_routing``), wide probes fall back flat, and
+    same routing (``QuantizerState``), wide probes fall back flat, and
     full-probe exactness is unaffected (cells stay a disjoint cover,
     whatever cell a vector landed in)."""
     from pyspark.sql import Window
@@ -702,38 +718,51 @@ def _write_index(
         centroids = centroids.withColumn(
             "_train_iters", F.lit(train_iters)
         )
-    if pq and pq_mode == "residual":
-        packed = _residual_codebook(assigned, centroids, pq_k=pq_k)
-        packed.write.mode("overwrite").parquet(
-            co.spark_path(f"{root}/codebook")
+    spark = corpus.sparkSession
+    cb_path = f"{root}/codebook"
+    # Encode runs against the codebook sidecar just written, not the
+    # codebook's lineage, which would re-run training (parquet
+    # round-trips the doubles exactly). A residual codebook trains on
+    # the assignment itself, so the assignment has two consumers and
+    # is persisted: the corpus assignment pass runs once.
+    shared = pq and pq_mode == "residual"
+    if shared:
+        assigned = assigned.persist()
+    try:
+        if shared:
+            _residual_codebook(assigned, centroids, pq_k=pq_k).write.mode(
+                "overwrite"
+            ).parquet(co.spark_path(cb_path))
+            packed = spark.read.parquet(co.spark_path(cb_path))
+            rows = _encode_assigned(assigned, packed, centroids)
+        elif pq:
+            as_cand = withn2.select(
+                F.col("id").alias("candidate_id"), F.col("emb").alias("c_emb")
+            )
+            _pq_codebook(
+                as_cand, train=_pq_train_sample(as_cand), pq_k=pq_k
+            ).write.mode("overwrite").parquet(co.spark_path(cb_path))
+            packed = spark.read.parquet(co.spark_path(cb_path))
+            rows = _encode_assigned(assigned, packed)
+        else:
+            rows = assigned.select("id", "emb", "n2", "cell")
+        rows.write.mode("overwrite").partitionBy("cell").parquet(
+            co.spark_path(f"{root}/cells")
         )
-        rows = _encode_assigned(assigned, packed, centroids)
-    elif pq:
-        as_cand = withn2.select(
-            F.col("id").alias("candidate_id"), F.col("emb").alias("c_emb")
+        centroids.write.mode("overwrite").parquet(
+            co.spark_path(f"{root}/centroids")
         )
-        packed = _pq_codebook(
-            as_cand, train=_pq_train_sample(as_cand), pq_k=pq_k
-        )
-        packed.write.mode("overwrite").parquet(
-            co.spark_path(f"{root}/codebook")
-        )
-        rows = _encode_assigned(assigned, packed)
-    else:
-        rows = assigned.select("id", "emb", "n2", "cell")
-    rows.write.mode("overwrite").partitionBy("cell").parquet(
-        co.spark_path(f"{root}/cells")
-    )
-    centroids.write.mode("overwrite").parquet(
-        co.spark_path(f"{root}/centroids")
-    )
-    # Every build mode persists its centroid frame (the Lloyd boundary
-    # both the assignment and the sidecar write reuse); release it once
-    # both consumers have run — a long-lived serving session otherwise
-    # leaks one cached K-row frame per store/rebuild (the ADVICE-r7
-    # _pq_encode leak class; readers re-open centroids from the
-    # sidecar, never from this frame).
-    cent_cache.unpersist()
+    finally:
+        # Every build mode persists its centroid frame (the Lloyd
+        # boundary both the assignment and the sidecar write reuse), and
+        # a residual build its assignment; release both once their
+        # consumers have run — a long-lived serving session otherwise
+        # leaks cached frames per store/rebuild (the ADVICE-r7
+        # _pq_encode leak class; readers re-open the sidecars, never
+        # these frames).
+        if shared:
+            assigned.unpersist()
+        cent_cache.unpersist()
 
 
 class ConcurrentMaintenanceError(RuntimeError):
@@ -1538,28 +1567,18 @@ def _append_rows(
     column-type mismatch — an append must never be able to corrupt
     the table it extends (found by the r8 symmetry test: a ×2.0-scaled
     float batch arrives as array<double>)."""
-    spark = new_vectors.sparkSession
-    stored_emb_type = spark.read.parquet(
-        co.spark_path(f"{root}/cells")
-    ).schema["emb"].dataType
+    state = QuantizerState(new_vectors.sparkSession, root, co)
     # (id, emb) only, emb in the stored type — any caller-supplied n2
     # is dropped so the norm refolds on the exact stored values
     new_vectors = new_vectors.select(
-        "id", F.col("emb").cast(stored_emb_type).alias("emb")
+        "id",
+        F.col("emb").cast(state.cells_schema["emb"].dataType).alias("emb"),
     )
-    centroids = spark.read.parquet(co.spark_path(f"{root}/centroids"))
-    assigned = _nearest_cell(
-        _with_n2(new_vectors),
-        centroids,
-        keep=1,
-        coarse=_routing(centroids),
-        metric=_assignment_metric(_index_metric(centroids)),
-    )
-    if co.isdir(f"{root}/codebook"):
-        packed = spark.read.parquet(co.spark_path(f"{root}/codebook"))
+    assigned = state.assign(new_vectors)
+    if state.codebook is not None:
         # centroids double as the residual base when the codebook is
         # _residual-tagged; _encode_assigned ignores them otherwise
-        rows = _encode_assigned(assigned, packed, centroids)
+        rows = _encode_assigned(assigned, state.codebook, state.centroids)
     else:
         rows = assigned.select("id", "emb", "n2", "cell")
     rows.write.mode("append").partitionBy("cell").parquet(
@@ -1666,17 +1685,11 @@ def resident_ids(
         if handle is not None
         else open_ivf_index(spark, index_dir, persist=False, coordinator=co)
     )
-    stored = spark.read.parquet(h.cells_path)
+    stored = spark.read.schema(h.state.cells_schema).parquet(h.cells_path)
     rows = batch.select(
         "id", F.col("emb").cast(stored.schema["emb"].dataType).alias("emb")
     )
-    assigned = _nearest_cell(
-        _with_n2(rows),
-        h.centroids,
-        keep=1,
-        coarse=_routing(h.centroids),
-        metric=_assignment_metric(_index_metric(h.centroids)),
-    ).select("id", "cell")
+    assigned = h.state.assign(rows).select("id", "cell")
     resident = stored.select("id", "cell").join(
         F.broadcast(assigned), ["cell", "id"], "left_semi"
     )
@@ -1755,14 +1768,6 @@ def _without_tombstones(
     )
 
 
-_COARSE_MEMO: "weakref.WeakKeyDictionary[DataFrame, int]" = (
-    weakref.WeakKeyDictionary()
-)
-_METRIC_MEMO: "weakref.WeakKeyDictionary[DataFrame, str]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _assignment_metric(metric: str) -> str:
     """Cell-ASSIGNMENT objective for a quantizer trained under
     ``metric``: l2 and ip both assign under L2 (an ip index ranks
@@ -1774,76 +1779,178 @@ def _assignment_metric(metric: str) -> str:
 def _index_metric(centroids: DataFrame) -> str:
     """The quantizer's TRAINING metric, read from the ``_metric`` tag
     on the centroid sidecar (r11). Absent tag = ``cosine`` (every
-    pre-r11 index and every default store). Same index-open-metadata
-    class and per-frame memo as ``_routing``'s ``_coarse`` scalar —
-    the drain's persisted handle reads it once per drain."""
+    pre-r11 index and every default store)."""
     if "_metric" not in centroids.columns:
         return "cosine"
-    metric = _METRIC_MEMO.get(centroids)
-    if metric is None:
-        metric = centroids.select("_metric").first()[0]
-        _METRIC_MEMO[centroids] = metric
-    return metric
+    return centroids.select("_metric").first()[0]
 
 
-def _routing(centroids: DataFrame, nprobe: int | None = None):
-    """The stored quantizer's routing column, or None for flat. A
-    routed index carries ``_coarse`` on its centroid sidecar
-    (``_auto_index``); reading the scalar is index-OPEN metadata (one
-    value off a K-row sidecar, the moral equivalent of a parquet
-    footer read), not a per-row driver action. Probes route only when
-    ``nprobe`` fits inside one routed group's scored set (nprobe ≤
-    coarse ≈ √K): past that the routed candidate set itself is the
-    recall bound, and wide probes — including the nprobe=K exactness
-    degenerate — must scan cells flat.
+class QuantizerState:
+    """One generation's FROZEN serving state: everything a probe,
+    append or membership check derives from the write-once centroid
+    and codebook sidecars, derived once per generation instead of once
+    per call.
 
-    Weaker-bound note (ADVICE r8): routed group sizes VARY (each
-    centroid groups under its nearest of ~√K reps), so a routed probe
-    scores min(nprobe, |routed group|) cells — a group smaller than
-    nprobe yields fewer scored cells than the flat-nprobe contract.
-    This is documented rather than gated on the actual minimum group
-    size deliberately: falling back to flat for nprobe in
-    (min_group, coarse] would silently re-open the r8 asymmetry
-    (routed assignment + flat probe lost 15% planted rank-1 recall),
-    trading the contract that matters for near-dup probing (symmetry)
-    for one that doesn't (breadth). A caller who needs the strict
-    breadth contract at small nprobe uses ``route="flat"`` on
-    ``query_ivf_index`` — the broad-retrieval knob (r8 verdict #3).
+    - ``coarse`` (the ``_coarse`` routing scalar, None for a flat
+      index) and ``metric`` (the ``_metric`` training tag), read off
+      one sidecar row, and ``k`` (the centroid count ``nprobe="all"``
+      resolves to), read off the packed flat row;
+    - ``cells_schema``: the cell table's schema, so every read of the
+      cell relation declares it instead of running a schema-inference
+      job (appends cast to the stored types, so it cannot drift within
+      a generation);
+    - ``flat`` and ``routed``: the packed routing rows
+      (``similarity._pack_cells``). ``flat`` is metric-independent;
+      ``routed`` is packed under the ASSIGNMENT metric and serves both
+      assignment and symmetric probes, which route only when the probe
+      metric equals it (an ip index probes flat);
+    - ``decode`` (PQ indexes): ONE row of the sorted codebook
+      (``_cbs``, ``_kk``) plus, for a residual codebook, ``_cmap`` —
+      the centroids as a dense array indexed by cell (null at an empty
+      cell's slot), so residual decode is one broadcast and one
+      ``element_at`` instead of a codebook cross join plus a centroid
+      join.
 
-    The scalar is memoized per centroid-frame OBJECT in a module-level
-    WeakKeyDictionary (r8 verdict #6 — the previous cut mutated an
-    attribute onto the foreign DataFrame instance): the streaming
-    drain's handle holds one persisted centroid frame across every
-    wave, so the 1-row read runs once per drain; the per-call batch
-    path re-reads it, which is the unavoidable open cost of an
-    un-opened index."""
-    if "_coarse" not in centroids.columns:
-        return None
-    coarse_val = _COARSE_MEMO.get(centroids)
-    if coarse_val is None:
-        coarse_val = centroids.select("_coarse").first()[0]
-        _COARSE_MEMO[centroids] = coarse_val
-    if nprobe is not None and nprobe > coarse_val:
-        return None
-    return F.col("_coarse")
+    With ``persist=True`` (``open_ivf_index`` for a multi-wave caller)
+    the sidecars and every derived row are cached and materialized
+    here, so a wave's plan reads the cached rows: no sidecar scan, no
+    collect_list aggregate. Otherwise (the one-shot batch path) the
+    rows are plain lazy frames, each built on first use and reused
+    within the call, so the plans are the per-call ones. ``release``
+    drops the cache entries."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        co: PosixCoordinator = _POSIX,
+        persist: bool = False,
+    ):
+        self.centroids = spark.read.parquet(
+            co.spark_path(f"{root}/centroids")
+        )
+        self.codebook = (
+            spark.read.parquet(co.spark_path(f"{root}/codebook"))
+            if co.isdir(f"{root}/codebook")
+            else None
+        )
+        self.cells_schema = spark.read.parquet(
+            co.spark_path(f"{root}/cells")
+        ).schema
+        self.persisted = persist
+        if persist:
+            self.centroids = self.centroids.persist()
+            if self.codebook is not None:
+                self.codebook = self.codebook.persist()
+        # the sidecar tags are literal columns: one row holds them all
+        cols = self.centroids.columns
+        tags = [c for c in ("_coarse", "_metric") if c in cols]
+        row = self.centroids.select(*tags).first().asDict() if tags else {}
+        self.coarse = row.get("_coarse")
+        self.metric = row.get("_metric", "cosine")
+        self._k: int | None = None
+        self._rows: dict[str, DataFrame] = {}
+        if persist:
+            # materialize every derived row now, so the first wave pays
+            # for none of them
+            self.k, self.routed, self.decode
+
+    def _row(self, name: str, build) -> DataFrame:
+        row = self._rows.get(name)
+        if row is None:
+            row = build()
+            if self.persisted:
+                row = row.persist()
+                row.count()
+            self._rows[name] = row
+        return row
+
+    @property
+    def k(self) -> int:
+        if self._k is None:
+            self._k = self.flat.select(F.size("_cents")).first()[0]
+        return self._k
+
+    @property
+    def flat(self) -> DataFrame:
+        return self._row("flat", lambda: _pack_cells(self.centroids))
+
+    @property
+    def routed(self) -> DataFrame | None:
+        if self.coarse is None:
+            return None
+        return self._row(
+            "routed",
+            lambda: _group_cells(
+                self.flat, self.coarse, _assignment_metric(self.metric)
+            ),
+        )
+
+    @property
+    def decode(self) -> DataFrame | None:
+        if self.codebook is None:
+            return None
+        return self._row("decode", self._decode_row)
+
+    def _decode_row(self) -> DataFrame:
+        # Position-indexed decode (r10): the packed codebook is COMPLETE
+        # (every (s, cell) trained — seeds guarantee non-empty cells) so
+        # after one array_sort entry (s, cell) sits at s·pq_k + cell and
+        # each code decodes with ONE element_at — O(PQ_M) per row, pq_k-
+        # independent (the earlier filter-scan decode made the wave wall
+        # grow with the code budget: pq_k 16→64 measured 2.2→4.0 s).
+        cb = self.codebook.select(
+            F.array_sort("_cb").alias("_cbs"),
+            (F.size("_cb") / F.lit(PQ_M)).cast("int").alias("_kk"),
+        )
+        if "_residual" not in self.codebook.columns:
+            return cb
+        # cell ids run 0..max but a Lloyd cell can end up empty, so the
+        # lookup is dense: slot i holds cell i's centroid, or null
+        cmap = self.flat.select(
+            F.expr(
+                "transform(sequence(0, array_max(transform(_cents, "
+                "e -> e.cell))), i -> filter(_cents, e -> e.cell = i)[0]"
+                ".centroid)"
+            ).alias("_cmap")
+        )
+        return cb.crossJoin(cmap)
+
+    def assign(self, vectors: DataFrame) -> DataFrame:
+        """(id, emb[, n2]) → + cell: the nearest cell under the frozen
+        quantizer, through the SAME routing the stored assignment used
+        — one quantizer function for base, appends and membership."""
+        routed = self.routed
+        return _route_cells(
+            _with_n2(vectors),
+            routed if routed is not None else self.flat,
+            keep=1,
+            metric=_assignment_metric(self.metric),
+        )
+
+    def release(self) -> None:
+        if self.persisted:
+            for df in (self.centroids, self.codebook, *self._rows.values()):
+                if df is not None:
+                    df.unpersist()
 
 
 @dataclass
 class IvfIndexHandle:
-    """One OPENED index generation: the resolved paths plus the (tiny,
-    persisted when ``persisted``) sidecar frames — everything a serving
-    call needs, all from the SAME generation, so a reader can never
-    pair one generation's cells with another's quantizer (r9 rebuild
-    atomicity). A long-running caller (the streaming ANN drain) opens
-    once and calls ``refresh`` at each wave boundary: the pointer
-    re-read is one tiny file stat; sidecars are re-read and re-cached
-    only when a rebuild/compaction actually moved the generation."""
+    """One OPENED index generation: the resolved paths plus its frozen
+    serving state (``QuantizerState``, cached when ``persisted``) —
+    everything a serving call needs, all from the SAME generation, so a
+    reader can never pair one generation's cells with another's
+    quantizer (r9 rebuild atomicity). A long-running caller (the
+    streaming ANN drain) opens once and calls ``refresh`` at each wave
+    boundary: the pointer re-read is one tiny file stat; the state is
+    rebuilt only when a rebuild/compaction actually moved the
+    generation."""
 
     index_dir: str
     gen: int
     cells_path: str
-    centroids: DataFrame
-    codebook: DataFrame | None
+    state: QuantizerState
     persisted: bool
     coordinator: PosixCoordinator = field(default_factory=lambda: _POSIX)
     # tombstone cache (r12): unlike the frozen sidecars, the tombstone
@@ -1856,6 +1963,14 @@ class IvfIndexHandle:
     # handle-less calls load fresh and see them immediately.
     tombstones: DataFrame | None = None
     ts_files: frozenset = field(default_factory=frozenset)
+
+    @property
+    def centroids(self) -> DataFrame:
+        return self.state.centroids
+
+    @property
+    def codebook(self) -> DataFrame | None:
+        return self.state.codebook
 
     def refresh(self, spark: SparkSession) -> "IvfIndexHandle":
         """Current handle for this index: ``self`` while the committed
@@ -1886,12 +2001,9 @@ class IvfIndexHandle:
         return self
 
     def close(self) -> None:
-        if self.persisted:
-            self.centroids.unpersist()
-            if self.codebook is not None:
-                self.codebook.unpersist()
-            if self.tombstones is not None:
-                self.tombstones.unpersist()
+        self.state.release()
+        if self.persisted and self.tombstones is not None:
+            self.tombstones.unpersist()
 
 
 def open_ivf_index(
@@ -1900,35 +2012,25 @@ def open_ivf_index(
     persist: bool = True,
     coordinator: PosixCoordinator | None = None,
 ) -> IvfIndexHandle:
-    """Resolve the committed generation ONCE and load its sidecars.
-    ``persist=True`` caches the K-row centroid table (and the 1-row
-    codebook, when present) for a multi-wave caller; ``persist=False``
-    is the one-shot batch path (plain frames, no cache entry to
-    leak). ``cells_path`` on the handle is a SPARK-resolvable path
-    (the coordinator's mapping already applied)."""
+    """Resolve the committed generation ONCE and build its serving
+    state. ``persist=True`` caches the state (sidecars, packed routing
+    rows, decode row) and the tombstone set for a multi-wave caller;
+    ``persist=False`` is the one-shot batch path (plain frames, no
+    cache entry to leak). ``cells_path`` on the handle is a
+    SPARK-resolvable path (the coordinator's mapping already applied)."""
     co = coordinator or _POSIX
     gen = _cells_generation(index_dir, co)
     root = _gen_root(index_dir, gen, co)
-    centroids = spark.read.parquet(co.spark_path(f"{root}/centroids"))
-    codebook = (
-        spark.read.parquet(co.spark_path(f"{root}/codebook"))
-        if co.isdir(f"{root}/codebook")
-        else None
-    )
+    state = QuantizerState(spark, root, co, persist=persist)
     ts_files = frozenset(co.list_parquet_files(f"{root}/tombstones"))
     tombstones = _tombstones_from_files(spark, ts_files, co)
-    if persist:
-        centroids = centroids.persist()
-        if codebook is not None:
-            codebook = codebook.persist()
-        if tombstones is not None:
-            tombstones = tombstones.persist()
+    if persist and tombstones is not None:
+        tombstones = tombstones.persist()
     return IvfIndexHandle(
         index_dir=index_dir,
         gen=gen,
         cells_path=co.spark_path(f"{root}/cells"),
-        centroids=centroids,
-        codebook=codebook,
+        state=state,
         persisted=persist,
         coordinator=co,
         tombstones=tombstones,
@@ -1938,7 +2040,7 @@ def open_ivf_index(
 
 def _probes(
     queries: DataFrame,
-    centroids: DataFrame,
+    state: QuantizerState,
     nprobe: int,
     route: str = "symmetric",
 ) -> DataFrame:
@@ -1958,6 +2060,17 @@ def _probes(
     Regime rule: symmetric for dedup/near-copy probing, flat for broad
     retrieval at nprobe ≤ √K; above √K the two coincide.
 
+    Weaker-bound note (ADVICE r8): routed group sizes VARY (each
+    centroid groups under its nearest of ~√K reps), so a routed probe
+    scores min(nprobe, |routed group|) cells — a group smaller than
+    nprobe yields fewer scored cells than the flat-nprobe contract.
+    This is documented rather than gated on the actual minimum group
+    size deliberately: falling back to flat for nprobe in
+    (min_group, coarse] would silently re-open the r8 asymmetry,
+    trading the contract that matters for near-dup probing (symmetry)
+    for one that doesn't (breadth); ``route="flat"`` is the strict
+    breadth contract.
+
     Cell RANKING runs under the quantizer's TRAINING metric (the
     ``_metric`` sidecar tag, r11): a metric-trained quantizer's cells
     tile the space under that metric's geometry, so probing them with
@@ -1975,19 +2088,17 @@ def _probes(
     probes, and the per-query K-fold costs nothing next to the scan."""
     if route not in ("symmetric", "flat"):
         raise ValueError(f"route must be 'symmetric' or 'flat': {route!r}")
-    metric = _index_metric(centroids)
-    if metric == "ip":
-        coarse = None
-    else:
-        coarse = (
-            _routing(centroids, nprobe) if route == "symmetric" else None
-        )
-    return _nearest_cell(
+    routed = (
+        route == "symmetric"
+        and state.metric != "ip"
+        and state.coarse is not None
+        and nprobe <= state.coarse
+    )
+    return _route_cells(
         _with_n2(queries),
-        centroids,
+        state.routed if routed else state.flat,
         keep=nprobe,
-        coarse=coarse,
-        metric=metric,
+        metric=state.metric,
     ).select(
         F.col("id").alias("query_id"),
         F.col("emb").alias("q_emb"),
@@ -2126,11 +2237,12 @@ def query_ivf_index(
             spark, index_dir, persist=False, coordinator=coordinator
         )
     )
+    state = h.state
     if nprobe == "all":
-        nprobe = h.centroids.count()
+        nprobe = state.k
     elif not isinstance(nprobe, int):
         raise ValueError(f"nprobe must be an int or 'all': {nprobe!r}")
-    probes = _probes(queries, h.centroids, nprobe, route=route)
+    probes = _probes(queries, state, nprobe, route=route)
     # logical deletes (r12): every tier anti-joins the generation's
     # tombstone set; the rerank tier inherits the screen through its
     # shortlist. A CALLER handle serves its cached frame — refreshed
@@ -2147,8 +2259,9 @@ def query_ivf_index(
     # listing runs once per call instead of per scan. Column pruning is
     # per-consumer (each scan node keeps its own ReadSchema), and the
     # relation is created fresh per CALL — not cached on the handle —
-    # so intra-generation appends stay visible to the next call.
-    cells_rel = spark.read.parquet(h.cells_path)
+    # so intra-generation appends stay visible to the next call. It
+    # reads under the generation's declared schema: no inference job.
+    cells_rel = spark.read.schema(state.cells_schema).parquet(h.cells_path)
     if not pq:
         stored = _without_tombstones(
             cells_rel.select(
@@ -2163,7 +2276,7 @@ def query_ivf_index(
             score_col, _metric_score(metric, "c_emb", "c_n2")
         )
         return _metric_topk(scored, metric)
-    if h.codebook is None:
+    if state.decode is None:
         raise ValueError(
             f"{index_dir} was stored without pq=True — no codebook sidecar"
         )
@@ -2173,38 +2286,26 @@ def query_ivf_index(
         ),
         tombstones,
     )
-    # Position-indexed decode (r10): the packed codebook is COMPLETE
-    # (every (s, cell) trained — seeds guarantee non-empty cells) so
-    # after one array_sort on the 1-row sidecar, entry (s, cell) sits
-    # at s·pq_k + cell and each code decodes with ONE element_at —
-    # O(PQ_M) per row. The previous filter-scan decode was
-    # O(PQ_M²·pq_k) per row and made the wave wall GROW with the
-    # store-time code budget (pq_k 16→64 measured 2.2→4.0 s on the
-    # 20× corpus, i.e. the pq_k recall lever was paying a decode tax);
-    # indexed, the decode cost is pq_k-independent. The sort runs once
-    # per call on PQ_M·pq_k structs, then broadcasts.
-    cb_indexed = h.codebook.select(
-        F.array_sort("_cb").alias("_cbs"),
-        (F.size("_cb") / F.lit(PQ_M)).cast("int").alias("_kk"),
-    )
+    # decode = pure lookups into the state's ONE broadcast decode row
+    # (sorted codebook, and for IVFADC the cell-indexed centroids): the
+    # probed-cell scan still reads only (id, codes, recon_n2, cell)
     decode = F.expr(
         f"flatten(transform(sequence(0, {PQ_M - 1}), s -> "
         "element_at(_cbs, s * _kk + element_at(codes, s + 1) + 1)"
         ".centroid))"
     )
     joined = stored.join(F.broadcast(probes), "cell").crossJoin(
-        F.broadcast(cb_indexed)
+        F.broadcast(state.decode)
     )
-    if "_residual" in h.codebook.columns:
-        # IVFADC (r9): reconstruction = centroid(cell) + decode(codes).
-        # The centroid arrives by ONE more broadcast join on the cell —
-        # the K-row sidecar is already in memory for probing, so the
-        # probed-cell scan still reads only (id, codes, recon_n2, cell).
-        joined = joined.join(
-            F.broadcast(h.centroids.select("cell", "centroid")), "cell"
-        ).withColumn(
+    if "_cmap" in state.decode.columns:
+        # IVFADC (r9): reconstruction = centroid(cell) + decode(codes)
+        joined = joined.withColumn(
             "recon",
-            F.zip_with("centroid", decode, lambda a, b: a + b),
+            F.zip_with(
+                F.expr("element_at(_cmap, cast(cell as int) + 1)"),
+                decode,
+                lambda a, b: a + b,
+            ),
         )
     else:
         joined = joined.withColumn("recon", decode)

@@ -511,6 +511,27 @@ class TokenLeaseCoordinator(ArrowFsCoordinator):
         self.write_text(tmp, f"{token} {self._clock() + self.lease_ttl}")
         self.fs.move(tmp, path)
 
+    def _reap_stamps(self, path: str) -> None:
+        """Best-effort removal of ``<lease>.w-*`` tmp stamps: a writer
+        that crashed between ``_write_lease``'s tmp write and its
+        rename leaves one behind forever. Run only by a writer that
+        has just broken an expired or corrupt lease and now holds it,
+        so no live holder's stamp can be in flight; a racer whose
+        in-flight tmp vanishes loses its ``_take`` (the move fails)
+        and retries against our live lease."""
+        parent, _, name = path.rpartition("/")
+        sel = self._pafs.FileSelector(parent, allow_not_found=True)
+        try:
+            infos = self.fs.get_file_info(sel)
+        except OSError:
+            return
+        for info in infos:
+            if info.base_name.startswith(f"{name}.w-"):
+                try:
+                    self.fs.delete_file(info.path)
+                except OSError:
+                    pass
+
     def _take(self, path: str, token: str) -> bool:
         """One acquisition attempt: stamp our lease (atomic — see
         ``_write_lease``), then confirm by re-read TWICE, one settle
@@ -521,7 +542,12 @@ class TokenLeaseCoordinator(ArrowFsCoordinator):
         and its write for both holders to confirm. Still probabilistic
         (the class docstring's honest residual); the override point
         for a store with conditional puts closes it fully."""
-        self._write_lease(path, token)
+        try:
+            self._write_lease(path, token)
+        except FileNotFoundError:
+            # our tmp stamp was reaped by a peer that just broke the
+            # same stale lease (``_reap_stamps``): we lost the race
+            return False
         for _ in range(2):
             time.sleep(self._settle)
             got = self._parse(self.read_text(path))
@@ -534,6 +560,9 @@ class TokenLeaseCoordinator(ArrowFsCoordinator):
         path = f"{index_dir}/MAINTENANCE.lock"
         token = uuid.uuid4().hex
         deadline = time.monotonic() + timeout
+        # lease-clock start of the current run of unparseable reads; a
+        # free or expired read ends the run, so each garbled episode
+        # waits its own full TTL
         garbled_since = None
         while True:
             raw = self.read_text(path)
@@ -559,9 +588,10 @@ class TokenLeaseCoordinator(ArrowFsCoordinator):
                 # torn read can never take over a live lease, while a
                 # genuinely corrupt leak still hands over within the
                 # same bound a crashed holder gets.
-                now_m = time.monotonic()
-                garbled_since = garbled_since or now_m
-                if now_m - garbled_since <= self.lease_ttl:
+                now = self._clock()
+                if garbled_since is None:
+                    garbled_since = now
+                if now - garbled_since <= self.lease_ttl:
                     if time.monotonic() > deadline:
                         raise TimeoutError(
                             f"could not acquire lease {path} within "
@@ -571,8 +601,13 @@ class TokenLeaseCoordinator(ArrowFsCoordinator):
                         )
                     time.sleep(self._settle)
                     continue
+            if cur is not None or raw is None:
+                garbled_since = None  # free or expired: episode over
             # free, expired, or corrupt-past-TTL: attempt takeover
             if self._take(path, token):
+                if raw is not None:
+                    # we broke a stale lease: clear its writers' debris
+                    self._reap_stamps(path)
                 break
             if time.monotonic() > deadline:
                 raise TimeoutError(

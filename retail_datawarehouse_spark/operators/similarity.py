@@ -18,7 +18,7 @@ oracle — exact-equality checkable, no tolerance games.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from retail_datawarehouse_spark.registry import register
@@ -733,60 +733,102 @@ def _nearest_cell(
     stored index at nprobe=4/K=200 (r8, BASELINE.md) — which is why
     the stored index keeps ``_coarse`` on its centroid sidecar and
     routes appends and small-nprobe probes through the same quantizer
-    (``ann_index._routing``)."""
-    out_cols = [c for c in vectors.columns]
-    vin = (
-        vectors
-        if "n2" in vectors.columns
-        else vectors.withColumn("n2", _norm2_expr(F.col("emb")))
+    (``ann_index.QuantizerState``).
+
+    The work splits in two (``_pack_cells`` then ``_route_cells``): the
+    pack step depends only on the centroids, so a stored index's
+    serving state packs once per generation and every probe or append
+    runs only the route step against the packed row."""
+    return _route_cells(
+        vectors, _pack_cells(centroids, coarse, metric), keep, metric
     )
+
+
+def _pack_cells(
+    centroids: DataFrame, coarse=None, metric: str = "cosine"
+) -> DataFrame:
+    """The pack step of ``_nearest_cell``: the K centroids as ONE row,
+    ``_cents`` = [(cell, centroid, _cn2)] — the flat row, the same
+    under every metric. With ``coarse`` (an int, or a Column constant
+    over ``centroids``) the row is routed instead (``_group_cells``).
+    Element order inside ``_cents`` is irrelevant: the route step
+    sorts by (key, cell)."""
     with_n2 = centroids.withColumn("_cn2", _norm2_expr(F.col("centroid")))
-    if coarse is not None:
-        reps = with_n2.filter(F.col("cell") < coarse).select(
-            F.col("cell").alias("rep"),
-            F.col("centroid").alias("rep_c"),
-            F.col("_cn2").alias("rep_n2"),
+    cents = F.collect_list(F.struct("cell", "centroid", "_cn2")).alias(
+        "_cents"
+    )
+    if coarse is None:
+        return with_n2.agg(cents)
+    if isinstance(coarse, Column):
+        flat = with_n2.agg(cents, F.max(coarse).alias("_coarse"))
+        return _group_cells(flat, F.col("_coarse"), metric)
+    return _group_cells(with_n2.agg(cents), coarse, metric)
+
+
+def _group_cells(flat: DataFrame, coarse, metric: str) -> DataFrame:
+    """Routed row from a flat packed row: the centroids with cell id
+    below ``coarse`` (an int, or a Column of ``flat``) become the
+    routing representatives ``_reps`` (sorted by rep id), and every
+    ``_cents`` entry gains ``_group``, its nearest rep under ``metric``
+    — the SAME metric the vector routing uses, or routed groups would
+    not match. One projection over the 1-row frame (the K×coarse
+    grouping folds run inside it), so a packed flat row — cached or
+    not — routes without another aggregate."""
+    reps = F.array_sort(
+        F.transform(
+            F.filter("_cents", lambda c: c.cell < coarse),
+            lambda c: F.struct(
+                c.cell.alias("rep"),
+                c.centroid.alias("rep_c"),
+                c["_cn2"].alias("rep_n2"),
+            ),
         )
-        packed_reps = reps.agg(
-            F.collect_list(F.struct("rep", "rep_c", "rep_n2")).alias("_reps")
-        )
-        # Group each centroid under its nearest rep (tiny K×coarse pass,
-        # fully in-plan, broadcast both ways) — under the SAME metric as
-        # the vector routing below, or routed groups would not match.
-        grouped = with_n2.crossJoin(F.broadcast(packed_reps)).withColumn(
-            "_group",
+    )
+    grouped = F.transform(
+        "_cents",
+        lambda c: F.struct(
+            c.cell.alias("cell"),
+            c.centroid.alias("centroid"),
+            c["_cn2"].alias("_cn2"),
             F.array_min(
                 F.transform(
                     "_reps",
                     lambda s: F.struct(
                         _assign_key(
                             metric,
-                            _dot_expr(F.col("centroid"), s.rep_c),
-                            F.col("_cn2"),
+                            _dot_expr(c.centroid, s.rep_c),
+                            c["_cn2"],
                             s["rep_n2"],
                         ).alias("negcos"),
                         s.rep.alias("rep"),
                     ),
                 )
-            )["rep"],
-        )
-        packed = grouped.agg(
-            F.collect_list(
-                F.struct("cell", "centroid", "_cn2", "_group")
-            ).alias("_cents"),
-            F.first(
-                F.array_sort(
-                    F.transform(
-                        "_reps",
-                        lambda s: F.struct(
-                            s.rep.alias("rep"),
-                            s.rep_c.alias("rep_c"),
-                            s.rep_n2.alias("rep_n2"),
-                        ),
-                    )
-                )
-            ).alias("_reps"),
-        )
+            )["rep"].alias("_group"),
+        ),
+    )
+    return flat.select("_cents", reps.alias("_reps")).select(
+        grouped.alias("_cents"), "_reps"
+    )
+
+
+def _route_cells(
+    vectors: DataFrame, packed: DataFrame, keep: int, metric: str = "cosine"
+) -> DataFrame:
+    """The route step of ``_nearest_cell``: rank the packed row's cells
+    for every vector under ``metric`` and keep the top ``keep`` as
+    (*vectors.columns, cell, cell_rank). A ``_reps`` column on
+    ``packed`` means two-level routing (fold the reps, then only the
+    routed group's members); ``metric`` must be the one the routed row
+    was packed under."""
+    out_cols = [c for c in vectors.columns]
+    vin = (
+        vectors
+        if "n2" in vectors.columns
+        else vectors.withColumn("n2", _norm2_expr(F.col("emb")))
+    )
+    routed = "_reps" in packed.columns
+    cand_set = "_cents"
+    if routed:
         route = F.array_min(
             F.transform(
                 "_reps",
@@ -802,41 +844,10 @@ def _nearest_cell(
             )
         )["rep"]
         cand_set = F.filter("_cents", lambda s: s["_group"] == F.col("_route"))
-        ranked = F.slice(
-            F.array_sort(
-                F.transform(
-                    cand_set,
-                    lambda s: F.struct(
-                        _assign_key(
-                            metric,
-                            _dot_expr(F.col("emb"), s.centroid),
-                            F.col("n2"),
-                            s["_cn2"],
-                        ).alias("negcos"),
-                        s.cell.alias("cell"),
-                    ),
-                )
-            ),
-            1,
-            keep,
-        )
-        return (
-            vin.crossJoin(F.broadcast(packed))
-            .withColumn("_route", route)
-            .select(*out_cols, F.posexplode(ranked).alias("_pos", "_r"))
-            .select(
-                *out_cols,
-                F.col("_r.cell").alias("cell"),
-                (F.col("_pos") + 1).alias("cell_rank"),
-            )
-        )
-    packed = with_n2.agg(
-        F.collect_list(F.struct("cell", "centroid", "_cn2")).alias("_cents")
-    )
     ranked = F.slice(
         F.array_sort(
             F.transform(
-                "_cents",
+                cand_set,
                 lambda s: F.struct(
                     _assign_key(
                         metric,
@@ -851,14 +862,15 @@ def _nearest_cell(
         1,
         keep,
     )
-    return (
-        vin.crossJoin(F.broadcast(packed))
-        .select(*out_cols, F.posexplode(ranked).alias("_pos", "_r"))
-        .select(
-            *out_cols,
-            F.col("_r.cell").alias("cell"),
-            (F.col("_pos") + 1).alias("cell_rank"),
-        )
+    joined = vin.crossJoin(F.broadcast(packed))
+    if routed:
+        joined = joined.withColumn("_route", route)
+    return joined.select(
+        *out_cols, F.posexplode(ranked).alias("_pos", "_r")
+    ).select(
+        *out_cols,
+        F.col("_r.cell").alias("cell"),
+        (F.col("_pos") + 1).alias("cell_rank"),
     )
 
 

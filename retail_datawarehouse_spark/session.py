@@ -21,6 +21,15 @@ Scale rationale per knob:
 - ``spark.sql.ansi.enabled=false`` — the reference's coerce-or-drop
   parse semantics (SURVEY.md P6): malformed dates become NULL, then a
   NOT NULL filter drops them; no exception path.
+- ``spark.python.sql.dataFrameDebugging.enabled=false`` — PySpark 4
+  otherwise records the Python call site on every Column/DataFrame
+  call, several extra py4j round trips each, which roughly doubles the
+  py4j traffic of building a plan (measured, warm session: 1,935 → 986
+  calls to plan one stored-index ADC+rerank query through a handle,
+  1,921 → 1,008 to plan q51–q55 over the sf0.01 fixture). The
+  trade-off: analysis errors no longer name the Python line that built
+  the failing expression; the error class and the plan fragment are
+  unchanged.
 """
 
 from __future__ import annotations
@@ -50,6 +59,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.crossJoin.enabled", "true")

@@ -452,10 +452,9 @@ def test_append_touches_only_landed_cells(
         for d in glob.glob(f"{idx}/cells/cell=*")
     }
     centroids = spark.read.parquet(f"{idx}/centroids")
-    from retail_datawarehouse_spark.operators.ann_index import _routing
-
     # the expected landing set must come from the SAME quantizer the
-    # append uses — the auto index routes (r8 symmetric routing)
+    # append uses — the auto index routes (r8 symmetric routing) by the
+    # _coarse scalar on its centroid sidecar
     landed = {
         r.cell
         for r in _nearest_cell(
@@ -467,7 +466,7 @@ def test_append_touches_only_landed_cells(
             ),
             centroids,
             keep=1,
-            coarse=_routing(centroids),
+            coarse=F.col("_coarse"),
         ).collect()
     }
     grown = {
@@ -1018,16 +1017,19 @@ def test_flat_route_knob_changes_small_nprobe_probes_only(
     measurement found 43.5% cell disagreement), (b) full probe is
     identical under both (the regimes coincide above √K), (c) an
     unknown mode raises."""
-    from retail_datawarehouse_spark.operators.ann_index import _probes
+    from retail_datawarehouse_spark.operators.ann_index import (
+        _probes,
+        open_ivf_index,
+    )
 
     corpus, queries = _fixture(spark, sf_correctness_dir)
     idx = str(tmp_path / "ivf_route")
     store_ivf_index(corpus, idx)  # auto build → routed quantizer
-    cents = spark.read.parquet(f"{idx}/centroids")
-    assert "_coarse" in cents.columns
+    state = open_ivf_index(spark, idx, persist=False).state
+    assert "_coarse" in state.centroids.columns
 
     def probe_sets(route):
-        rows = _probes(queries, cents, nprobe=2, route=route).collect()
+        rows = _probes(queries, state, nprobe=2, route=route).collect()
         out = {}
         for r in rows:
             out.setdefault(r.query_id, set()).add(r.cell)
@@ -2410,3 +2412,132 @@ def test_suite_stored_branches_pin_the_lifecycle_under_the_gate(
         )
     finally:
         df.unpersist()
+
+
+def _executed_nodes(df) -> list[str]:
+    """One line per physical node an executed query ran — through AQE
+    query stages, reused exchanges and subqueries (DPP), but not into
+    a cached relation's build plan: an ``InMemoryTableScan`` reads
+    cached batches, whatever plan once built them."""
+    out = []
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def visit(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return visit(p.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return visit(p.plan())
+        line = p.simpleString(100)
+        if name == "FileSourceScanExec":
+            # the printed Location is abbreviated; record the full roots
+            line += " roots=" + p.relation().location().rootPaths().mkString(",")
+        out.append(line)
+        if name == "ReusedExchangeExec":
+            visit(p.child())
+        for c in seq(p.children()) + seq(p.subqueries()):
+            visit(c)
+
+    visit(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_handle_wave_serves_from_cached_quantizer_state(
+    spark, sf_correctness_dir, tmp_path
+):
+    """A handle's generation state (packed routing row, decode row,
+    cell schema, K) is built once at open: a wave served through a
+    persisted handle executes no scan of the centroid or codebook
+    sidecars and no aggregate over them — while the handle-less call
+    still packs them in-plan — and both return the same rows, at small
+    nprobe and at nprobe="all", on the float, ADC and rerank tiers."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        delete_from_ivf_index,
+        open_ivf_index,
+    )
+
+    corpus, queries = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "ivf_state")
+    store_ivf_index(corpus, idx, pq=True)  # auto cells: a routed index
+    delete_from_ivf_index(corpus.filter(F.col("id") % 23 == 0), idx)
+    # handle-less: the call packs the sidecars in its own plan (checked
+    # before any handle caches them — Spark's cache lookup would then
+    # serve the same plan fragments to this call too)
+    bare = query_ivf_index(queries, idx, nprobe=2, pq=True, rerank=8)
+    bare.collect()
+    bare_nodes = "\n".join(_executed_nodes(bare))
+    assert "ObjectHashAggregate" in bare_nodes
+    assert "/centroids" in bare_nodes and "/codebook" in bare_nodes
+    h = open_ivf_index(spark, idx, persist=True)
+    try:
+        state = h.state
+        assert state.coarse is not None and state.metric == "cosine"
+        assert state.k == spark.read.parquet(f"{idx}/centroids").count()
+        wave = query_ivf_index(
+            queries, idx, nprobe=2, pq=True, rerank=8, handle=h
+        )
+        wave.collect()
+        served = _executed_nodes(wave)
+        assert any("InMemoryTableScan" in ln for ln in served), served
+        assert any("/cells" in ln for ln in served), served
+        for ln in served:
+            assert "Aggregate" not in ln, ln
+            if "FileScan" in ln:
+                assert "/centroids" not in ln and "/codebook" not in ln, ln
+        for kw in (
+            dict(nprobe=1),
+            dict(nprobe="all"),
+            dict(nprobe=2, pq=True),
+            dict(nprobe="all", pq=True),
+            dict(nprobe=2, pq=True, rerank=8),
+            dict(nprobe=2, route="flat"),
+        ):
+            assert _rows(query_ivf_index(queries, idx, handle=h, **kw)) == (
+                _rows(query_ivf_index(queries, idx, **kw))
+            ), kw
+    finally:
+        h.close()
+
+
+def test_refresh_rebuilds_state_only_when_the_generation_moves(
+    spark, sf_correctness_dir, tmp_path
+):
+    """``refresh`` keeps the handle — and its state — while the
+    committed generation is unchanged, even across appends and deletes
+    (which it re-checks), and returns a handle with NEW state after a
+    compaction or a rebuild, serving exactly what a fresh
+    ``open_ivf_index`` serves."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        compact_ivf_index,
+        delete_from_ivf_index,
+        open_ivf_index,
+        rebuild_ivf_index,
+    )
+
+    corpus, queries = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "ivf_refresh")
+    store_ivf_index(corpus.filter(F.col("id") % 2 == 0), idx, pq=True)
+    h = open_ivf_index(spark, idx, persist=True)
+    state = h.state
+    append_to_ivf_index(corpus.filter(F.col("id") % 2 == 1), idx)
+    delete_from_ivf_index(corpus.filter(F.col("id") % 29 == 0), idx)
+    same = h.refresh(spark)
+    assert same is h and same.state is state and same.tombstones is not None
+    for move in (
+        lambda: compact_ivf_index(spark, idx),
+        lambda: rebuild_ivf_index(spark, idx, cells=24),
+    ):
+        move()
+        h = h.refresh(spark)
+        assert h.state is not state
+        state = h.state
+        fresh = open_ivf_index(spark, idx, persist=False)
+        assert h.gen == fresh.gen and state.k == fresh.state.k
+        for kw in (dict(nprobe=3, pq=True, rerank=16), dict(nprobe="all")):
+            assert _rows(query_ivf_index(queries, idx, handle=h, **kw)) == (
+                _rows(query_ivf_index(queries, idx, handle=fresh, **kw))
+            ), kw
+    assert state.k == 24
+    h.close()

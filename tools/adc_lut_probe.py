@@ -65,7 +65,7 @@ def lut_topk(spark, queries, idx, nprobe):
         F.array_sort("_cb").alias("_cbs"),
         (F.size("_cb") / F.lit(PQ_M)).cast("int").alias("_kk"),
     )
-    probes = _probes(queries, h.centroids, nprobe)
+    probes = _probes(queries, h.state, nprobe)
     # residual mode: the centroid term q·centroid(cell) rides the probe
     # row — the K-row sidecar is already broadcast for probing
     qc = F.expr(_SPARK_DOT.format(a="q_emb", b="centroid"))
