@@ -92,9 +92,14 @@ rather than a fork.
 DELETION (r12; r11 verdict #1) is the Lucene/Delta delete-vector
 discipline: ``delete_from_ivf_index`` records id-only TOMBSTONES in a
 per-generation sidecar under the same maintenance lock every writer
-holds — O(request batch + debt), the corpus never read. Deletes are
-LOGICAL first (every serving tier anti-joins the debt-bounded sidecar
-via one broadcast, re-read per call so they land mid-generation;
+holds — O(request batch + debt), the corpus never read. The delete
+is one driver-side commit: the batch's new ids are published as ONE
+parquet file through the coordinator (``publish_parquet``: a hidden
+tmp name no listing or Spark reader matches, renamed into place), so
+a crash mid-delete leaves only invisible debris and the pre-delete
+state serving. Deletes are LOGICAL first (every serving tier
+anti-joins the debt-bounded sidecar via one broadcast, re-read per
+call so they land mid-generation;
 ``admit_novel_vectors`` therefore re-admits content whose deleted
 parent no longer blocks it) and PHYSICAL at the next compaction or
 rebuild (the anti-join folds into the rewrite those ops already do;
@@ -115,9 +120,15 @@ codebook + cell-indexed centroids) and the cell table's schema — is a
 the generation moves. A wave through a persisted handle therefore
 packs nothing and infers no schema; what stays per-wave is what can
 change inside a generation: the tombstone listing (re-checked at each
-refresh) and the cell-file listing (each call's fresh relation, so
-appends are served by the next call). Handle-less calls build the
-state once per call.
+refresh, a plain frame over the pinned files) and the cell-file
+listing (each call's fresh relation, so appends are served by the
+next call). The persisted state is shared per generation within the
+session: handle-less calls on the same generation — appends (resolved
+under their lock), ``resident_ids``, ``admit_novel_vectors``'s append,
+queries — serve from it, keyed by index dir, generation number and the
+centroid sidecar's file names. Only the frozen quantizer is shared;
+tombstones and cell listings stay per call. With no live handle on
+the generation, a handle-less call builds its state once per call.
 
 Incremental add is the FAISS `add`-after-`train` discipline: arriving
 vectors are assigned against the STORED (frozen) centroids — and, for
@@ -138,6 +149,8 @@ mode) over the grown corpus.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1547,7 +1560,12 @@ def append_to_ivf_index(
     waits for the lock — either way the appended rows are served by
     whatever generation is current after both commit. Appends
     serialize with each other; see the module docstring for the
-    multi-writer story."""
+    multi-writer story.
+
+    The frozen quantizer comes from the generation resolved under the
+    lock: a live persisted handle's state when one holds that
+    generation (no sidecar read, no schema inference, no pack), else a
+    state built for this call."""
     co = coordinator or _POSIX
     with co.lock(index_dir):
         gen = _cells_generation(index_dir, co)
@@ -1567,7 +1585,7 @@ def _append_rows(
     column-type mismatch — an append must never be able to corrupt
     the table it extends (found by the r8 symmetry test: a ×2.0-scaled
     float batch arrives as array<double>)."""
-    state = QuantizerState(new_vectors.sparkSession, root, co)
+    state = _frozen_state(new_vectors.sparkSession, root, co)
     # (id, emb) only, emb in the stored type — any caller-supplied n2
     # is dropped so the norm refolds on the exact stored values
     new_vectors = new_vectors.select(
@@ -1600,9 +1618,9 @@ def delete_from_ivf_index(
     (``{gen_root}/tombstones`` — an id-only parquet table) under the
     SAME generation + lock protocol every maintainer uses, and returns
     the number of NEW tombstones recorded (already-tombstoned ids
-    dedupe to zero — idempotent by construction; deleting an id the
-    index never held is a harmless no-op, so the call never scans the
-    corpus to validate existence).
+    dedupe to zero and null ids are dropped — idempotent by
+    construction; deleting an id the index never held is a harmless
+    no-op, so the call never scans the corpus to validate existence).
 
     Semantics (the Lucene/Delta delete-vector discipline):
     - Deletion is LOGICAL first: every serving probe
@@ -1624,38 +1642,43 @@ def delete_from_ivf_index(
       can't tell the copies apart). Re-admit content under a fresh id
       (what ``admit_novel_vectors`` does naturally), or compact first.
 
-    Crash story: the sidecar write is one Spark parquet append —
-    committed files appear only at job commit, and a crash mid-write
-    leaves ``_temporary`` debris no reader matches (the tombstone
-    reader uses a declared schema and the flat committed listing), so
-    the index keeps serving its pre-delete state. The lock serializes
-    the write against maintainers exactly like an append: a compaction
-    committing concurrently either sees these tombstone files in its
-    locked re-list (and carries them forward) or they land against the
+    Crash story: the new ids land as ONE parquet file published by
+    the coordinator (``publish_parquet``): written under a hidden tmp
+    name that neither the committed listing nor a Spark directory read
+    matches, then renamed into place, so readers see the whole batch
+    or none of it. A crash before the rename leaves only that
+    invisible tmp file (it goes with its generation), and the index
+    keeps serving its pre-delete state. The lock serializes the
+    publish against maintainers exactly like an append: a compaction
+    committing concurrently either sees this tombstone file in its
+    locked re-list (and carries it forward) or it lands against the
     generation it already committed.
 
-    Shape at 100 TB: O(request batch + tombstone debt) — one distinct
-    + one anti-join against the debt-bounded sidecar, one batch-sized
-    write. The corpus is never read."""
-    spark = ids.sparkSession
+    Shape at 100 TB: O(request batch + tombstone debt), all on the
+    driver — collect the batch's ids (null ids name nothing and are
+    dropped), read the generation's debt-bounded id set from its
+    pinned listing, publish the difference. So a request must be one
+    request-sized batch; the corpus is never read."""
     co = coordinator or _POSIX
     with co.lock(index_dir):
-        gen = _cells_generation(index_dir, co)
-        root = _gen_root(index_dir, gen, co)
+        root = _gen_root(index_dir, _cells_generation(index_dir, co), co)
         ts_dir = f"{root}/tombstones"
-        new = ids.select(F.col("id").cast("long").alias("id")).distinct()
-        existing = _load_tombstones(spark, root, co)
+        requested = {
+            r.id
+            for r in ids.select(F.col("id").cast("long").alias("id")).collect()
+            if r.id is not None
+        }
+        existing = co.read_parquet(co.list_parquet_files(ts_dir))
         if existing is not None:
-            new = new.join(existing, "id", "left_anti")
-        # eager, batch-sized: the append below writes into the very
-        # path `existing` reads, so a lazy frame would re-plan over
-        # the grown sidecar (the admit_novel_vectors self-invalidation
-        # class) — and the count must state the PRE-append world
-        new = new.localCheckpoint()
-        n = new.count()
-        if n:
-            new.write.mode("append").parquet(co.spark_path(ts_dir))
-    return n
+            requested -= set(existing.column("id").to_pylist())
+        if requested:
+            import pyarrow as pa
+
+            co.publish_parquet(
+                ts_dir,
+                pa.table({"id": pa.array(sorted(requested), pa.int64())}),
+            )
+    return len(requested)
 
 
 def resident_ids(
@@ -1680,11 +1703,7 @@ def resident_ids(
     frame."""
     spark = batch.sparkSession
     co = coordinator or _POSIX
-    h = (
-        handle
-        if handle is not None
-        else open_ivf_index(spark, index_dir, persist=False, coordinator=co)
-    )
+    h = handle if handle is not None else _serving_view(spark, index_dir, co)
     stored = spark.read.schema(h.state.cells_schema).parquet(h.cells_path)
     rows = batch.select(
         "id", F.col("emb").cast(stored.schema["emb"].dataType).alias("emb")
@@ -1698,7 +1717,7 @@ def resident_ids(
     # cached snapshot the wave's probe used, so a delete landing
     # mid-wave cannot make one wave's report internally inconsistent
     # (probe screened against the old set, membership against the new);
-    # on the handle-less path the open above just loaded the sidecar
+    # on the handle-less path the view above just listed the sidecar
     # fresh, so h.tombstones IS the immediate view (re-loading it here,
     # as the first cut did, was a second listing for identical
     # freshness — r13 review).
@@ -1785,6 +1804,18 @@ def _index_metric(centroids: DataFrame) -> str:
     return centroids.select("_metric").first()[0]
 
 
+def _read_sidecar(
+    spark: SparkSession, path: str, co: PosixCoordinator = _POSIX
+) -> DataFrame:
+    """A write-once sidecar read through its committed FILES, not its
+    directory: Spark's cache matches a directory read by path, so a
+    directory deleted and stored again would otherwise be served the
+    rows a live handle cached from its predecessor."""
+    return spark.read.parquet(
+        *[co.spark_path(p) for p in sorted(co.list_parquet_files(path))]
+    )
+
+
 class QuantizerState:
     """One generation's FROZEN serving state: everything a probe,
     append or membership check derives from the write-once centroid
@@ -1817,7 +1848,14 @@ class QuantizerState:
     collect_list aggregate. Otherwise (the one-shot batch path) the
     rows are plain lazy frames, each built on first use and reused
     within the call, so the plans are the per-call ones. ``release``
-    drops the cache entries."""
+    drops the cache entries.
+
+    A persisted state is also SHARED within the session: ``open_ivf_index``
+    publishes it under the generation's identity (``_generation_key``),
+    and every handle-less call on that generation — append, query,
+    membership — serves from it instead of building its own. The table
+    holds states weakly and ``release`` withdraws them, so the handle
+    that owns a state still owns its lifetime."""
 
     def __init__(
         self,
@@ -1826,11 +1864,9 @@ class QuantizerState:
         co: PosixCoordinator = _POSIX,
         persist: bool = False,
     ):
-        self.centroids = spark.read.parquet(
-            co.spark_path(f"{root}/centroids")
-        )
+        self.centroids = _read_sidecar(spark, f"{root}/centroids", co)
         self.codebook = (
-            spark.read.parquet(co.spark_path(f"{root}/codebook"))
+            _read_sidecar(spark, f"{root}/codebook", co)
             if co.isdir(f"{root}/codebook")
             else None
         )
@@ -1850,6 +1886,7 @@ class QuantizerState:
         self.metric = row.get("_metric", "cosine")
         self._k: int | None = None
         self._rows: dict[str, DataFrame] = {}
+        self._key: tuple | None = None
         if persist:
             # materialize every derived row now, so the first wave pays
             # for none of them
@@ -1928,11 +1965,53 @@ class QuantizerState:
             metric=_assignment_metric(self.metric),
         )
 
+    def publish(self, key: tuple) -> None:
+        """Serve every handle-less call on the generation ``key``
+        names from this (persisted) state until it is released."""
+        self._key = key
+        with _SHARED_LOCK:
+            _SHARED_STATES[key] = self
+
     def release(self) -> None:
+        with _SHARED_LOCK:
+            if _SHARED_STATES.get(self._key) is self:
+                del _SHARED_STATES[self._key]
         if self.persisted:
             for df in (self.centroids, self.codebook, *self._rows.values()):
                 if df is not None:
                     df.unpersist()
+
+
+# Persisted generation states, by generation identity, within this
+# process. Weak values: an entry lives only while the handle owning the
+# state does, and ``release`` (close/refresh) withdraws it at once.
+_SHARED_STATES: "weakref.WeakValueDictionary[tuple, QuantizerState]" = (
+    weakref.WeakValueDictionary()
+)
+_SHARED_LOCK = threading.Lock()
+
+
+def _generation_key(
+    spark: SparkSession, root: str, co: PosixCoordinator = _POSIX
+) -> tuple:
+    """A generation's identity in one session: its root (index dir +
+    gen number) and the file names of its write-once centroid sidecar.
+    The names are unique per write, so a directory deleted and stored
+    again at gen 0 never matches a state of its predecessor."""
+    names = frozenset(
+        os.path.basename(p)
+        for p in co.list_parquet_files(f"{root}/centroids")
+    )
+    return (spark, co.spark_path(root), names)
+
+
+def _frozen_state(
+    spark: SparkSession, root: str, co: PosixCoordinator = _POSIX
+) -> QuantizerState:
+    """The generation's frozen state for a handle-less call: the one a
+    live persisted handle published, else a lazy per-call state."""
+    state = _SHARED_STATES.get(_generation_key(spark, root, co))
+    return state if state is not None else QuantizerState(spark, root, co)
 
 
 @dataclass
@@ -1953,14 +2032,15 @@ class IvfIndexHandle:
     state: QuantizerState
     persisted: bool
     coordinator: PosixCoordinator = field(default_factory=lambda: _POSIX)
-    # tombstone cache (r12): unlike the frozen sidecars, the tombstone
-    # set can GROW within a generation (deletes append files), so the
-    # handle caches the frame together with the file LISTING it was
-    # built from and refresh() re-reads only when the listing moved —
-    # one cheap flat listing per wave instead of a sidecar open per
-    # query call. Handle-based serving therefore sees deletes at WAVE
-    # boundaries (the same consistency point as generation flips);
-    # handle-less calls load fresh and see them immediately.
+    # tombstone snapshot (r12): unlike the frozen sidecars, the
+    # tombstone set can GROW within a generation (deletes add files),
+    # so the handle keeps a plain frame over the pinned file LISTING
+    # and refresh() rebuilds it only when the listing moved — one
+    # cheap flat listing per wave. It is not persisted: a wave reads
+    # it once, so a cache fill would be an extra job per refresh.
+    # Handle-based serving therefore sees deletes at WAVE boundaries
+    # (the same consistency point as generation flips); handle-less
+    # calls list fresh and see them immediately.
     tombstones: DataFrame | None = None
     ts_files: frozenset = field(default_factory=frozenset)
 
@@ -1990,20 +2070,17 @@ class IvfIndexHandle:
             self.coordinator.list_parquet_files(f"{root}/tombstones")
         )
         if files != self.ts_files:
-            if self.persisted and self.tombstones is not None:
-                self.tombstones.unpersist()
             self.tombstones = _tombstones_from_files(
                 spark, files, self.coordinator
             )
-            if self.persisted and self.tombstones is not None:
-                self.tombstones = self.tombstones.persist()
             self.ts_files = files
         return self
 
     def close(self) -> None:
-        self.state.release()
-        if self.persisted and self.tombstones is not None:
-            self.tombstones.unpersist()
+        # a non-persisted handle owns no cache — and a handle-less
+        # call's view may hold a state another handle published
+        if self.persisted:
+            self.state.release()
 
 
 def open_ivf_index(
@@ -2014,28 +2091,57 @@ def open_ivf_index(
 ) -> IvfIndexHandle:
     """Resolve the committed generation ONCE and build its serving
     state. ``persist=True`` caches the state (sidecars, packed routing
-    rows, decode row) and the tombstone set for a multi-wave caller;
-    ``persist=False`` is the one-shot batch path (plain frames, no
-    cache entry to leak). ``cells_path`` on the handle is a
-    SPARK-resolvable path (the coordinator's mapping already applied)."""
+    rows, decode row) for a multi-wave caller and publishes it, so
+    handle-less calls on the same generation serve from it until the
+    handle is closed or refreshed past it; ``persist=False`` is the
+    one-shot batch path (plain frames, no cache entry to leak). The
+    tombstone set is a plain frame over the listing pinned here.
+    ``cells_path`` on the handle is a SPARK-resolvable path (the
+    coordinator's mapping already applied)."""
     co = coordinator or _POSIX
     gen = _cells_generation(index_dir, co)
     root = _gen_root(index_dir, gen, co)
-    state = QuantizerState(spark, root, co, persist=persist)
+    if persist:
+        key = _generation_key(spark, root, co)
+        state = QuantizerState(spark, root, co, persist=True)
+        state.publish(key)
+    else:
+        state = QuantizerState(spark, root, co)
+    return _handle_over(spark, index_dir, gen, root, state, persist, co)
+
+
+def _handle_over(
+    spark: SparkSession,
+    index_dir: str,
+    gen: int,
+    root: str,
+    state: QuantizerState,
+    persisted: bool,
+    co: PosixCoordinator,
+) -> IvfIndexHandle:
     ts_files = frozenset(co.list_parquet_files(f"{root}/tombstones"))
-    tombstones = _tombstones_from_files(spark, ts_files, co)
-    if persist and tombstones is not None:
-        tombstones = tombstones.persist()
     return IvfIndexHandle(
         index_dir=index_dir,
         gen=gen,
         cells_path=co.spark_path(f"{root}/cells"),
         state=state,
-        persisted=persist,
+        persisted=persisted,
         coordinator=co,
-        tombstones=tombstones,
+        tombstones=_tombstones_from_files(spark, ts_files, co),
         ts_files=ts_files,
     )
+
+
+def _serving_view(
+    spark: SparkSession, index_dir: str, co: PosixCoordinator
+) -> IvfIndexHandle:
+    """A handle-less call's view of the committed generation: its
+    frozen state from ``_frozen_state`` (shared when a persisted handle
+    holds the generation) and a fresh tombstone listing."""
+    gen = _cells_generation(index_dir, co)
+    root = _gen_root(index_dir, gen, co)
+    state = _frozen_state(spark, root, co)
+    return _handle_over(spark, index_dir, gen, root, state, False, co)
 
 
 def _probes(
@@ -2233,9 +2339,7 @@ def query_ivf_index(
     h = (
         handle
         if handle is not None
-        else open_ivf_index(
-            spark, index_dir, persist=False, coordinator=coordinator
-        )
+        else _serving_view(spark, index_dir, coordinator or _POSIX)
     )
     state = h.state
     if nprobe == "all":

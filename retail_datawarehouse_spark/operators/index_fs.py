@@ -32,6 +32,11 @@ MULTI-writer ones must subclass and back ``lock``/``commit_pointer``
 with a real lease (DynamoDB/ZooKeeper/a table format's commit
 protocol) — which is exactly the injection point this class exists to
 provide. The default POSIX deployment inherits none of these caveats.
+
+Small sidecars are written on the driver, not by Spark:
+``publish_parquet`` lands one parquet file under a hidden tmp name and
+renames it into place (the tombstone sidecar's commit), and
+``read_parquet`` reads a pinned listing back as one Arrow table.
 """
 
 from __future__ import annotations
@@ -109,6 +114,48 @@ class PosixCoordinator:
         (``_temporary``, ``_SUCCESS``) never matches the suffix or
         depth, same discipline as ``list_cell_files``."""
         return set(glob.glob(f"{dir_path}/*.parquet"))
+
+    # -- driver-side parquet (the tombstone sidecar) ------------------
+    def read_parquet(self, paths):
+        """The listed parquet files as one ``pyarrow.Table`` (empty
+        listing → None): a driver-side read of a small sidecar."""
+        import pyarrow as pa
+
+        if not paths:
+            return None
+        return pa.concat_tables([self._read_table(p) for p in sorted(paths)])
+
+    def publish_parquet(self, dir_path: str, table) -> str:
+        """Write ``table`` as ONE new parquet file under ``dir_path``
+        (created if missing) and return its path. The bytes go to a
+        tmp name first — ``.``-prefixed, so Spark's file index skips it
+        as hidden, and not ``.parquet``-suffixed, so no listing matches
+        it — and are then renamed into place: a reader sees the whole
+        file or nothing, and a crash before the rename leaves only
+        invisible debris (removed with its generation)."""
+        if not self.isdir(dir_path):
+            self.makedirs(dir_path)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = f"{dir_path}/.{name}.tmp"
+        self._write_parquet(tmp, table)
+        self._move_into_place(tmp, f"{dir_path}/{name}")
+        return f"{dir_path}/{name}"
+
+    def _read_table(self, path: str):
+        import pyarrow.parquet as pq
+
+        return pq.read_table(path)
+
+    def _write_parquet(self, path: str, table) -> None:
+        import pyarrow.parquet as pq
+
+        with open(path, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
+
+    def _move_into_place(self, src: str, dst: str) -> None:
+        os.rename(src, dst)
 
     # -- the two protocol-critical ops ------------------------------
     def commit_pointer(self, index_dir: str, gen: int) -> None:
@@ -276,6 +323,23 @@ class ArrowFsCoordinator(PosixCoordinator):
             if i.type == self._pafs.FileType.File
             and i.path.endswith(".parquet")
         }
+
+    def _read_table(self, path: str):
+        import pyarrow.parquet as pq
+
+        return pq.read_table(path, filesystem=self.fs)
+
+    def _write_parquet(self, path: str, table) -> None:
+        import pyarrow.parquet as pq
+
+        with self.fs.open_output_stream(path) as f:
+            pq.write_table(table, f)
+
+    def _move_into_place(self, src: str, dst: str) -> None:
+        # atomic rename on local/SubTree trees; an object store's PUT of
+        # the final key is already atomic, so the tmp hop there is only
+        # a copy (same caveat as commit_pointer)
+        self.fs.move(src, dst)
 
     def commit_pointer(self, index_dir: str, gen: int) -> None:
         # move() is an atomic rename on local/SubTree trees; on
@@ -449,7 +513,16 @@ class TokenLeaseCoordinator(ArrowFsCoordinator):
     winner's (live) token and PASS, and the loser's release would pop
     the winner's entry, disabling the winner's fencing. Per-thread
     state keeps each holder fencing against the token IT wrote, which
-    is the whole point of a fencing token."""
+    is the whole point of a fencing token.
+
+    Migration note: a lock file this class cannot parse is treated as
+    possibly held for one full ``lease_ttl`` before it is broken. A
+    bare-token ``MAINTENANCE.lock`` leaked by an ``ArrowFsCoordinator``
+    or ``PosixCoordinator`` writer parses that way, so switching an
+    index with such a leftover to this coordinator stalls the first
+    acquirer for one TTL (600 s at a 600 s TTL) before it takes over.
+    Remove the leftover by hand once no old-type writer is live to
+    hand over at once."""
 
     def __init__(
         self,

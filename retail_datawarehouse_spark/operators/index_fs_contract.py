@@ -42,9 +42,29 @@ keyword overrides (the fencing clause disables renewal to simulate a
 full stall — a live holder's heartbeat would otherwise correctly keep
 the lease).
 
-What the kit does NOT cover, honestly: lease TTL/expiry semantics
-beyond the fencing clause above (see ``TokenLeaseCoordinator``'s
-tests for takeover timing pins). And a calibration note on
+Lease EXPIRY is certified in-process on an injected clock
+(``lease_expiry_on_injected_clock``): for a coordinator with a
+``lease_ttl`` (the reference lease and its subclasses) the clause
+swaps in a fake lease clock through the ``clock=`` seam (``_clock``)
+and switches renewal off (``renew_every = 0``, a fully stalled
+holder), so a live lease must block until its TTL has elapsed on
+that clock, then be taken over, and the expired holder's commit and
+release must fail with ``LockLostError``. No wall-clock TTL has to
+pass, so the kit can run a lease sized never to expire on a loaded
+box and still certify expiry. A lock without a TTL passes the clause
+vacuously.
+
+The sidecar publish (``parquet_publish``) is certified on the
+coordinator's surface: a published file is listed only once
+published, a publish that died before its rename (crash injected at
+``_move_into_place``) leaves nothing listed, and ids read back as
+int64. Given a ``spark`` session, ``run_coordinator_contract`` also
+runs ``SPARK_CHECKS``: a Spark read of the sidecar directory sees the
+published ids as ``long`` and never the leftover tmp file.
+
+What the kit does NOT cover, honestly: lease timing beyond the
+clauses above (see ``TokenLeaseCoordinator``'s tests for takeover
+timing pins). And a calibration note on
 ``lock_mutual_exclusion_threads`` (ADVICE r12 #2): for
 check-then-create locks (``ArrowFsCoordinator.lock``) mutual
 exclusion under contention is PROBABILISTIC — the write-then-confirm
@@ -167,6 +187,152 @@ def _check_parquet_listing_shape(co, root):
     )
 
 
+def _publish_ids(co, dir_path, ids):
+    import pyarrow as pa
+
+    return co.publish_parquet(
+        dir_path, pa.table({"id": pa.array(ids, pa.int64())})
+    )
+
+
+def _crash_publish(co, dir_path, ids):
+    """A publish that dies after its tmp write, before the rename."""
+
+    def crash(src, dst):
+        raise OSError("injected crash before the rename")
+
+    co._move_into_place = crash
+    try:
+        _publish_ids(co, dir_path, ids)
+    except OSError:
+        return
+    finally:
+        del co._move_into_place
+    raise AssertionError(
+        "publish_parquet must land its file through _move_into_place "
+        "(the kit's crash-injection point)"
+    )
+
+
+_PUBLISHED = [1, 2**40, -3]
+
+
+def _check_parquet_publish(co, root):
+    ts = f"{root}/idx/tombstones"
+    assert co.list_parquet_files(ts) == set(), (
+        "nothing is listed before a publish"
+    )
+    _crash_publish(co, ts, [999])
+    assert co.list_parquet_files(ts) == set(), (
+        "a publish that died before its rename must leave nothing "
+        "listed — its tmp file is not committed data"
+    )
+    path = _publish_ids(co, ts, _PUBLISHED)
+    assert co.list_parquet_files(ts) == {path}, (
+        "a published file must be listed — exactly it, never its tmp "
+        f"debris: got {co.list_parquet_files(ts)!r}"
+    )
+    table = co.read_parquet(co.list_parquet_files(ts))
+    assert str(table.schema.field("id").type) == "int64", (
+        f"ids must round-trip as int64 (Spark long): {table.schema}"
+    )
+    assert table.column("id").to_pylist() == _PUBLISHED, (
+        "ids must round-trip exactly"
+    )
+
+
+def _check_publish_spark_read(co, root, spark):
+    ts = f"{root}/idx/tombstones"
+    _publish_ids(co, ts, _PUBLISHED)
+    _crash_publish(co, ts, [999])
+    df = spark.read.parquet(co.spark_path(ts))
+    assert dict(df.dtypes) == {"id": "bigint"}, (
+        f"a Spark read must see the ids as long: {df.dtypes}"
+    )
+    got = sorted(r.id for r in df.collect())
+    assert got == sorted(_PUBLISHED), (
+        "a Spark read of the sidecar directory must see the published "
+        f"ids and never a leftover tmp file: got {got}"
+    )
+
+
+class _InjectedClock:
+    def __init__(self, t: float = 1_000_000.0):
+        self.t = t
+
+    def __call__(self) -> float:
+        return self.t
+
+
+def _check_lease_expiry_on_injected_clock(co, root):
+    if not hasattr(co, "lease_ttl"):
+        return  # a lock without a TTL never expires
+    from retail_datawarehouse_spark.operators.index_fs import LockLostError
+
+    idx = f"{root}/idx"
+    co.makedirs(idx)
+    clock = _InjectedClock()
+    saved = co._clock, co.renew_every
+    co._clock, co.renew_every = clock, 0
+    held, taken, done = (threading.Event() for _ in range(3))
+    out = {}
+
+    def stalled_holder():
+        try:
+            with co.lock(idx, timeout=30.0):
+                held.set()
+                taken.wait(60.0)
+                try:
+                    co.commit_pointer(idx, 1)
+                    out["commit"] = "unfenced"
+                except LockLostError:
+                    out["commit"] = "fenced"
+        except LockLostError:
+            out["release"] = "lost"
+        except Exception as exc:  # surfaced by the assertions below
+            out["error"] = repr(exc)
+        finally:
+            done.set()
+
+    t = threading.Thread(target=stalled_holder)
+    t.start()
+    try:
+        assert held.wait(60.0), f"the first holder never acquired: {out}"
+        clock.t += co.lease_ttl - 1.0
+        try:
+            with co.lock(idx, timeout=0.3):
+                raise AssertionError(
+                    "a live lease was taken over before its TTL elapsed "
+                    "on the lease clock"
+                )
+        except TimeoutError:
+            pass
+        clock.t += 2.0
+        try:
+            with co.lock(idx, timeout=5.0):
+                taken.set()
+                assert done.wait(60.0), "the stalled holder never finished"
+                co.commit_pointer(idx, 2)
+        except TimeoutError as exc:
+            raise AssertionError(
+                "a lease expired on the lease clock was not taken over: "
+                f"{exc}"
+            ) from exc
+    finally:
+        taken.set()
+        t.join(60.0)
+        co._clock, co.renew_every = saved
+    assert out.get("commit") == "fenced", (
+        f"the expired holder's commit must raise LockLostError: {out}"
+    )
+    assert out.get("release") == "lost", (
+        f"the expired holder's release must raise LockLostError: {out}"
+    )
+    assert co.read_text(f"{idx}/CURRENT").strip() == "2", (
+        "CURRENT must hold the taker's generation"
+    )
+
+
 def _check_pointer_commit(co, root):
     idx = f"{root}/idx"
     co.makedirs(idx)
@@ -265,10 +431,18 @@ CONTRACT_CHECKS = [
     ("gen_listing_shape", _check_gen_listing_shape),
     ("cell_listing_shape", _check_cell_listing_shape),
     ("parquet_listing_shape", _check_parquet_listing_shape),
+    ("parquet_publish", _check_parquet_publish),
     ("pointer_commit", _check_pointer_commit),
     ("lock_blocks_and_releases", _check_lock_blocks_and_releases),
     ("lock_mutual_exclusion_threads", _check_lock_mutual_exclusion_threads),
     ("spark_path_inversion", _check_spark_path_inversion),
+    ("lease_expiry_on_injected_clock", _check_lease_expiry_on_injected_clock),
+]
+
+# clauses that also need a Spark session (``run_coordinator_contract``'s
+# ``spark=``)
+SPARK_CHECKS = [
+    ("publish_spark_read", _check_publish_spark_read),
 ]
 
 
@@ -437,14 +611,23 @@ def run_lease_contract_processes(
     return names
 
 
-def run_coordinator_contract(co, scratch_root: str) -> list[str]:
+def run_coordinator_contract(
+    co, scratch_root: str, spark=None
+) -> list[str]:
     """Certify ``co`` against the index-coordinator protocol. Each
     check runs in its own namespace under ``scratch_root`` (created
-    here; must not already contain a same-named namespace). Raises
-    ``AssertionError`` naming the violated clause; returns the check
-    names on success."""
+    here; must not already contain a same-named namespace); with a
+    ``spark`` session the ``SPARK_CHECKS`` run too, after the rest.
+    Raises ``AssertionError`` naming the violated clause; returns the
+    check names on success."""
+    checks = list(CONTRACT_CHECKS)
+    if spark is not None:
+        checks += [
+            (name, lambda c, ns, check=check: check(c, ns, spark))
+            for name, check in SPARK_CHECKS
+        ]
     ran = []
-    for name, check in CONTRACT_CHECKS:
+    for name, check in checks:
         ns = f"{scratch_root}/{name}"
         co.makedirs(ns)
         try:

@@ -58,7 +58,7 @@ probed and only novel rows appended), and TAKEDOWN
 tombstones with membership-rescued receipts). Each is exactly-once
 under at-least-once replay because the underlying index operation's
 own predicate is idempotent — admission re-probes duplicates of
-itself, deletion anti-joins the existing sidecar — never because of
+itself, deletion subtracts the existing sidecar — never because of
 bolted-on dedup state.
 """
 
@@ -371,8 +371,8 @@ def run_takedown_available_now(
     sidecar ``(id, tombstoned, wave)``.
 
     Replay semantics (at-least-once ``foreachBatch``, exactly-once
-    TOMBSTONES): the delete's own dedupe — new ids are anti-joined
-    against the existing sidecar before the append — makes a replayed
+    TOMBSTONES): the delete's own dedupe — the existing sidecar's ids
+    are subtracted from the request before the publish — makes a replayed
     wave write ZERO new tombstone rows, the same
     correctness-from-the-predicate design as the admission drain (no
     dedup machinery bolted on). The receipt's ``tombstoned`` is rescued

@@ -2541,3 +2541,116 @@ def test_refresh_rebuilds_state_only_when_the_generation_moves(
             ), kw
     assert state.k == 24
     h.close()
+
+
+def _cells_xxhash(spark, idx) -> tuple:
+    """Row count and the sum of per-row xxhash64 over every stored
+    column of an index's committed cells."""
+    cells = spark.read.parquet(f"{idx}/cells")
+    return tuple(
+        cells.select(
+            F.count(F.lit(1)),
+            F.sum(F.xxhash64(*sorted(cells.columns)).cast("decimal(38,0)")),
+        ).first()
+    )
+
+
+def _append_plan(monkeypatch, new_vectors, idx) -> str:
+    """Run ``append_to_ivf_index`` and return the physical plan of the
+    frame it handed to the parquet writer."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **k):
+        written.append(self._df)
+        return real(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    try:
+        append_to_ivf_index(new_vectors, idx)
+    finally:
+        monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    assert len(written) == 1, written
+    return "\n".join(_executed_nodes(written[0]))
+
+
+def _assert_packs_sidecars(plan: str) -> None:
+    assert "ObjectHashAggregate" in plan, plan
+    assert "/centroids" in plan and "/codebook" in plan, plan
+
+
+def test_handle_less_append_serves_from_the_open_handles_state(
+    spark, sf_correctness_dir, tmp_path, monkeypatch
+):
+    """While a persisted handle holds the generation, a handle-less
+    append (resolved under its lock) serves from the handle's frozen
+    state: the frame it writes scans no centroid or codebook parquet and
+    aggregates nothing. It writes exactly the cells the per-call path
+    writes on a copy of the index (xxhash64 sum), and once the handle is
+    closed the append packs the sidecars itself again."""
+    import shutil
+
+    from retail_datawarehouse_spark.operators.ann_index import (
+        open_ivf_index,
+    )
+
+    corpus, _ = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "shared")
+    twin = str(tmp_path / "twin")
+    store_ivf_index(corpus.filter(F.col("id") % 2 == 0), idx, pq=True)
+    shutil.copytree(idx, twin)
+    batch = corpus.filter(F.col("id") % 4 == 1)
+    h = open_ivf_index(spark, idx, persist=True)
+    try:
+        shared = _append_plan(monkeypatch, batch, idx)
+        assert "InMemoryTableScan" in shared, shared
+        for ln in shared.splitlines():
+            assert "Aggregate" not in ln, ln
+            if "FileScan" in ln:
+                assert "/centroids" not in ln and "/codebook" not in ln, ln
+    finally:
+        h.close()
+    _assert_packs_sidecars(_append_plan(monkeypatch, batch, twin))
+    assert _cells_xxhash(spark, idx) == _cells_xxhash(spark, twin)
+    # closed: the handle's state is withdrawn, the next append packs
+    later = corpus.filter(F.col("id") % 4 == 3)
+    _assert_packs_sidecars(_append_plan(monkeypatch, later, idx))
+
+
+def test_restored_directory_never_reuses_a_live_handles_state(
+    spark, sf_correctness_dir, tmp_path, monkeypatch
+):
+    """A directory deleted and stored again is generation 0 again, but a
+    new generation: a handle still open on its predecessor must not lend
+    the new index its quantizer — the shared state is keyed by the
+    centroid sidecar's file names, and the sidecars are read by file so
+    Spark's path-keyed cache cannot serve the old rows either. The
+    append packs the NEW sidecars and writes what a per-call append on a
+    copy of the new index writes."""
+    import shutil
+
+    from retail_datawarehouse_spark.operators.ann_index import (
+        _generation_key,
+        open_ivf_index,
+    )
+
+    corpus, _ = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "restored")
+    twin = str(tmp_path / "restored_twin")
+    store_ivf_index(corpus.filter(F.col("id") % 2 == 0), idx, pq=True)
+    old = open_ivf_index(spark, idx, persist=True)
+    try:
+        shutil.rmtree(idx)
+        store_ivf_index(
+            corpus.filter(F.col("id") % 3 == 0), idx, cells=12, pq=True
+        )
+        assert _generation_key(spark, idx) != old.state._key
+        shutil.copytree(idx, twin)
+        batch = corpus.filter(F.col("id") % 5 == 1)
+        _assert_packs_sidecars(_append_plan(monkeypatch, batch, idx))
+        append_to_ivf_index(batch, twin)
+        assert _cells_xxhash(spark, idx) == _cells_xxhash(spark, twin)
+    finally:
+        old.close()

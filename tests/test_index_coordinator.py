@@ -12,6 +12,8 @@ the same corpus under the POSIX default."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -261,32 +263,35 @@ def _lease_co(tmp_path, **kw):
     )
 
 
-def test_contract_kit_green_on_all_shipped_coordinators(tmp_path):
+def test_contract_kit_green_on_all_shipped_coordinators(spark, tmp_path):
     """The extracted protocol suite certifies every shipped
     coordinator — POSIX, ArrowFs, and the lease reference — against
     the same clauses the concurrency tests pin, through one entry
-    point a deployer's subclass can also run."""
+    point a deployer's subclass can also run (with a Spark session, so
+    the sidecar publish is also checked against a Spark read)."""
     from retail_datawarehouse_spark.operators.index_fs import (
         PosixCoordinator,
     )
     from retail_datawarehouse_spark.operators.index_fs_contract import (
         CONTRACT_CHECKS,
+        SPARK_CHECKS,
         run_coordinator_contract,
     )
 
     ran = run_coordinator_contract(
-        PosixCoordinator(), str(tmp_path / "posix")
+        PosixCoordinator(), str(tmp_path / "posix"), spark=spark
     )
-    assert ran == [name for name, _ in CONTRACT_CHECKS]
+    assert ran == [name for name, _ in CONTRACT_CHECKS + SPARK_CHECKS]
     assert run_coordinator_contract(
-        _subtree_co(tmp_path / "arrow"), "scratch"
+        _subtree_co(tmp_path / "arrow"), "scratch", spark=spark
     ) == ran
     # Load-proof lease sizing (r14; the r13 driver's one red test): the
     # thread-contention clause runs REAL-clock holds on whatever box
     # grades the repo, and a 26-min-for-217-tests overload can stall a
     # thread long enough to matter. lease_ttl=600 makes mid-hold expiry
-    # unreachable inside the clause's 60 s lock timeouts (the TTL-expiry
-    # semantics have their own injectable-clock pins below), and the
+    # unreachable inside the clause's 60 s lock timeouts (expiry is
+    # certified by the kit's own lease_expiry_on_injected_clock clause,
+    # which drives the lease clock instead of waiting out a TTL), and the
     # default settle (0.05, not the fast-test 0.01) sizes the dual-
     # confirm window for a loaded scheduler. The lock-path races
     # themselves are fixed in code: atomic lease stamps + double
@@ -294,6 +299,7 @@ def test_contract_kit_green_on_all_shipped_coordinators(tmp_path):
     assert run_coordinator_contract(
         _lease_co(tmp_path / "lease", lease_ttl=600.0, settle=0.05),
         "scratch",
+        spark=spark,
     ) == ran
 
 
@@ -332,6 +338,43 @@ def test_contract_kit_red_on_broken_coordinators(tmp_path):
 
     with pytest.raises(AssertionError, match="cell_listing_shape"):
         run_coordinator_contract(SloppyListing(), str(tmp_path / "sloppy"))
+
+    class ListedTmp(PosixCoordinator):
+        def publish_parquet(self, dir_path, table):
+            # the tmp name ends in .parquet: a died publish is LISTED
+            if not self.isdir(dir_path):
+                self.makedirs(dir_path)
+            name = f"part-{len(os.listdir(dir_path))}.parquet"
+            tmp = f"{dir_path}/tmp-{name}"
+            self._write_parquet(tmp, table)
+            self._move_into_place(tmp, f"{dir_path}/{name}")
+            return f"{dir_path}/{name}"
+
+    with pytest.raises(AssertionError, match="parquet_publish"):
+        run_coordinator_contract(ListedTmp(), str(tmp_path / "listed"))
+
+    from retail_datawarehouse_spark.operators.index_fs import (
+        TokenLeaseCoordinator,
+    )
+
+    class NeverExpires(TokenLeaseCoordinator):
+        def _parse(self, text):
+            got = super()._parse(text)
+            return None if got is None else (got[0], float("inf"))
+
+    pafs = pytest.importorskip("pyarrow.fs")
+    root = str(tmp_path / "immortal")
+    os.makedirs(root)
+    immortal = NeverExpires(
+        pafs.SubTreeFileSystem(root, pafs.LocalFileSystem()),
+        spark_path_fn=lambda p: f"{root}/{p}" if p else root,
+        lease_ttl=600.0,
+        settle=0.01,
+    )
+    with pytest.raises(
+        AssertionError, match="lease_expiry_on_injected_clock"
+    ):
+        run_coordinator_contract(immortal, "scratch")
 
 
 def test_lease_expiry_takeover_and_fenced_commit(tmp_path):

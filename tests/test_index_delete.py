@@ -200,10 +200,19 @@ def test_delete_crash_injection_around_the_tombstone_commit(
     spark, sf_correctness_dir, tmp_path, monkeypatch
 ):
     """Crash story, both sides of the commit: (a) a delete that dies
-    BEFORE its parquet job commits leaves only ``_temporary`` debris —
-    the index serves its pre-delete state and the debris never poisons
-    later reads; (b) the failed call released the lock, so a retry
-    succeeds and the delete lands whole."""
+    BEFORE its tombstone file is in place leaves only debris no reader
+    matches — Spark ``_temporary`` attempt files from an older Spark
+    write, or the hidden tmp file of a publish that died before its
+    rename — so the index serves its pre-delete state and the debris
+    never poisons later reads; (b) a crash raised at the publish step
+    releases the lock, so a retry succeeds and the delete lands whole."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from retail_datawarehouse_spark.operators.index_fs import (
+        PosixCoordinator,
+    )
+
     corpus, queries = _fixture(spark, sf_correctness_dir)
     idx = str(tmp_path / "crash_idx")
     store_ivf_index(corpus, idx, cells=IVF_CELLS)
@@ -226,6 +235,12 @@ def test_delete_crash_injection_around_the_tombstone_commit(
     os.makedirs(attempt, exist_ok=True)
     with open(f"{attempt}/part-000.parquet", "w") as f:
         f.write("not parquet")
+    # ...and a publish that died between its tmp write and the rename:
+    # a VALID parquet file naming the victims, under the hidden tmp name
+    pq.write_table(
+        pa.table({"id": pa.array(victims, pa.int64())}),
+        f"{idx}/tombstones/.part-crashed.parquet.tmp",
+    )
     top1 = query_ivf_index(self_q, idx, nprobe="all").filter(
         F.col("rank") == 1
     )
@@ -234,26 +249,36 @@ def test_delete_crash_injection_around_the_tombstone_commit(
     } == set(victims)  # pre-delete state serves both
     assert maintain_ivf_index(spark, idx)["tombstones"] == 0
 
-    # (b) a crash raised INSIDE the locked write releases the lock
-    # (patch the CONCRETE DataFrame class — pyspark 4's classic
-    # subclass overrides the abstract base's methods)
-    df_cls = type(_ids_df(spark, victims))
-    real_ckpt = df_cls.localCheckpoint
-    monkeypatch.setattr(
-        df_cls,
-        "localCheckpoint",
-        lambda self, *a, **k: (_ for _ in ()).throw(
-            RuntimeError("injected crash")
-        ),
-    )
-    with pytest.raises(RuntimeError, match="injected crash"):
-        delete_from_ivf_index(_ids_df(spark, victims), idx)
-    monkeypatch.setattr(df_cls, "localCheckpoint", real_ckpt)
+    # (b) a crash raised INSIDE the locked commit releases the lock
+    def crash(self, dir_path, table):
+        raise RuntimeError("injected crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(PosixCoordinator, "publish_parquet", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            delete_from_ivf_index(_ids_df(spark, victims), idx)
     assert not os.path.exists(f"{idx}/MAINTENANCE.lock")
     # retry lands whole
     assert delete_from_ivf_index(_ids_df(spark, victims), idx) == 2
     after = query_ivf_index(self_q, idx, nprobe="all")
     assert not (_served_ids(after) & set(victims))
+
+
+def test_null_ids_in_a_delete_request_are_dropped(
+    spark, sf_correctness_dir, tmp_path
+):
+    """A null id names no vector: it is dropped from the request, so a
+    repeated request stays idempotent (1 new tombstone, then 0) and the
+    debt does not grow per call — a null never matches the existing set,
+    so recording it would re-tombstone it on every call."""
+    corpus, _ = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "null_idx")
+    store_ivf_index(corpus, idx, cells=IVF_CELLS)
+    victim = corpus.limit(1).collect()[0].id
+    request = spark.createDataFrame([(None,), (victim,)], "id long")
+    assert delete_from_ivf_index(request, idx) == 1
+    assert delete_from_ivf_index(request, idx) == 0
+    assert maintain_ivf_index(spark, idx)["tombstones"] == 1
 
 
 def test_late_delete_during_compaction_carries_forward(
