@@ -16,10 +16,10 @@ varies by storage is only HOW those ~10 small operations execute:
 - ``ArrowFsCoordinator(filesystem)``: routes every operation through a
   ``pyarrow.fs.FileSystem`` (S3FileSystem, GcsFileSystem, fsspec via
   ``PyFileSystem``, or a ``SubTreeFileSystem`` — the rebased-path
-  proxy the tests use), the same handle ``ivf_index_stats`` already
-  accepts. ``spark_path_fn`` maps coordinator paths to paths Spark's
-  Hadoop reader resolves (identity-under-root for SubTree; an
-  ``s3a://``-prefixer on a real object store).
+  proxy the tests use); ``ivf_index_stats(filesystem=)`` wraps a bare
+  filesystem in this class. ``spark_path_fn`` maps coordinator paths
+  to paths Spark's Hadoop reader resolves (identity-under-root for
+  SubTree; an ``s3a://``-prefixer on a real object store).
 
 Honesty on object-store semantics, stated here rather than discovered
 in production: pyarrow exposes no create-exclusive, so
@@ -35,8 +35,10 @@ provide. The default POSIX deployment inherits none of these caveats.
 
 Small sidecars are written on the driver, not by Spark:
 ``publish_parquet`` lands one parquet file under a hidden tmp name and
-renames it into place (the tombstone sidecar's commit), and
-``read_parquet`` reads a pinned listing back as one Arrow table.
+renames it into place (the tombstone sidecar's commit),
+``read_parquet`` reads a pinned listing back as one Arrow table, and
+``footer_rows`` reads only the listed files' footers (the index's
+per-cell rows, centroid count and tombstone debt).
 """
 
 from __future__ import annotations
@@ -124,6 +126,14 @@ class PosixCoordinator:
         if not paths:
             return None
         return pa.concat_tables([self._read_table(p) for p in sorted(paths)])
+
+    def footer_rows(self, paths) -> dict[str, int]:
+        """Row count of each listed parquet file, read from its footer
+        alone (no data page): the index metadata the health panel, the
+        maintenance sweep and the quantizer's K are summed from."""
+        import pyarrow.parquet as pq
+
+        return {p: pq.read_metadata(p).num_rows for p in paths}
 
     def publish_parquet(self, dir_path: str, table) -> str:
         """Write ``table`` as ONE new parquet file under ``dir_path``
@@ -328,6 +338,14 @@ class ArrowFsCoordinator(PosixCoordinator):
         import pyarrow.parquet as pq
 
         return pq.read_table(path, filesystem=self.fs)
+
+    def footer_rows(self, paths) -> dict[str, int]:
+        import pyarrow.parquet as pq
+
+        return {
+            p: pq.read_metadata(p, filesystem=self.fs).num_rows
+            for p in paths
+        }
 
     def _write_parquet(self, path: str, table) -> None:
         import pyarrow.parquet as pq

@@ -58,7 +58,9 @@ The sidecar publish (``parquet_publish``) is certified on the
 coordinator's surface: a published file is listed only once
 published, a publish that died before its rename (crash injected at
 ``_move_into_place``) leaves nothing listed, and ids read back as
-int64. Given a ``spark`` session, ``run_coordinator_contract`` also
+int64. ``footer_rows`` gives each listed file's footer row count (the
+row count a read of that file alone returns) and nothing for an empty
+listing. Given a ``spark`` session, ``run_coordinator_contract`` also
 runs ``SPARK_CHECKS``: a Spark read of the sidecar directory sees the
 published ids as ``long`` and never the leftover tmp file.
 
@@ -238,6 +240,23 @@ def _check_parquet_publish(co, root):
     )
     assert table.column("id").to_pylist() == _PUBLISHED, (
         "ids must round-trip exactly"
+    )
+
+
+def _check_footer_rows(co, root):
+    ts = f"{root}/idx/tombstones"
+    assert co.footer_rows(co.list_parquet_files(ts)) == {}, (
+        "footer_rows of an empty listing must be empty"
+    )
+    for ids in (_PUBLISHED, [], [7]):
+        _publish_ids(co, ts, ids)
+    _crash_publish(co, ts, [999])
+    listed = co.list_parquet_files(ts)
+    want = {p: co.read_parquet([p]).num_rows for p in listed}
+    got = co.footer_rows(listed)
+    assert got == want, (
+        "footer_rows must give each listed file's row count and nothing "
+        f"else: got {got!r}, want {want!r}"
     )
 
 
@@ -432,6 +451,7 @@ CONTRACT_CHECKS = [
     ("cell_listing_shape", _check_cell_listing_shape),
     ("parquet_listing_shape", _check_parquet_listing_shape),
     ("parquet_publish", _check_parquet_publish),
+    ("footer_rows", _check_footer_rows),
     ("pointer_commit", _check_pointer_commit),
     ("lock_blocks_and_releases", _check_lock_blocks_and_releases),
     ("lock_mutual_exclusion_threads", _check_lock_mutual_exclusion_threads),

@@ -1564,111 +1564,6 @@ def _residual_coded(
     ).withColumn("recon_n2", F.expr(_SPARK_NORM2.format(a="recon")))
 
 
-def _suite_dual_coded(
-    corpus: DataFrame, assigned: DataFrame, centroids: DataFrame
-) -> DataFrame:
-    """Fused raw-PQ + residual-PQ stored rows in ONE corpus pass (r13
-    optimization; guide §1.2 "don't compute things twice" / §2.3
-    "project before the exchange" applied to the suite's shared
-    build): the suite previously materialized ``coded``
-    (``_pq_encode`` over the assigned corpus) and ``coded_res``
-    (``_residual_coded`` over the same rows) as two separate persisted
-    frames — two full passes over the corpus, two persists, two
-    broadcast codebook cross joins — when both are row-wise functions
-    of the same (id, emb, cell, centroid) input. This helper computes
-    both column families in one Project over one pass and persists
-    ONCE; consumers select their half.
-
-    Bit-identity with the unfused forms (pinned by
-    tests/test_operators.py::test_suite_dual_coded_matches_unfused):
-    the codebooks are the same ``_pq_codebook``/``_residual_codebook``
-    trains; ``picked``/``picked_r`` are the exact argmin expressions
-    ``_pq_encode`` builds (same slice/struct tie-break); the residual
-    subtraction and centroid add-back are ``_residualize``/
-    ``_residual_coded``'s pinned zip_withs. Only the pass structure
-    changes, never an expression."""
-    packed_raw = _pq_codebook(corpus)
-    packed_res = _residual_codebook(assigned, centroids)
-    pk = packed_raw.select(
-        F.array_sort("_cb").alias("_cbs"),
-        (F.size("_cb") / F.lit(PQ_M)).cast("int").alias("_kk"),
-    ).crossJoin(
-        packed_res.select(
-            F.array_sort("_cb").alias("_cbs_r"),
-            (F.size("_cb") / F.lit(PQ_M)).cast("int").alias("_kk_r"),
-        )
-    )
-    base = assigned.join(
-        F.broadcast(centroids.select("cell", "centroid")), "cell"
-    ).select(
-        F.col("id").alias("candidate_id"),
-        F.col("emb").alias("c_emb"),
-        "cell",
-        "centroid",
-        F.zip_with(
-            "emb", "centroid", lambda x, y: x.cast("double") - y
-        ).alias("res"),
-    )
-    l2 = _SPARK_L2.format(a="element_at(subs, s + 1)", b="e.centroid")
-    l2r = _SPARK_L2.format(a="element_at(subs_r, s + 1)", b="e.centroid")
-    sub_of = (
-        "transform(sequence(0, {m}), s -> slice({col}, s * {d} + 1, {d}))"
-    )
-    fused = (
-        base.crossJoin(F.broadcast(pk))
-        .withColumn(
-            "subs", F.expr(sub_of.format(m=PQ_M - 1, col="c_emb", d=_PQ_SUB))
-        )
-        .withColumn(
-            "subs_r", F.expr(sub_of.format(m=PQ_M - 1, col="res", d=_PQ_SUB))
-        )
-        .withColumn(
-            "picked",
-            F.expr(
-                f"transform(sequence(0, {PQ_M - 1}), s -> "
-                "array_min(transform(slice(_cbs, s * _kk + 1, _kk), "
-                f"e -> struct({l2} AS d, e.cell AS cell, "
-                "e.centroid AS centroid))))"
-            ),
-        )
-        .withColumn(
-            "picked_r",
-            F.expr(
-                f"transform(sequence(0, {PQ_M - 1}), s -> "
-                "array_min(transform(slice(_cbs_r, s * _kk_r + 1, _kk_r), "
-                f"e -> struct({l2r} AS d, e.cell AS cell, "
-                "e.centroid AS centroid))))"
-            ),
-        )
-        .withColumn("codes", F.expr("transform(picked, x -> x.cell)"))
-        .withColumn(
-            "recon", F.expr("flatten(transform(picked, x -> x.centroid))")
-        )
-        .withColumn("recon_n2", F.expr(_SPARK_NORM2.format(a="recon")))
-        .withColumn("codes_r", F.expr("transform(picked_r, x -> x.cell)"))
-        .withColumn(
-            "recon_r",
-            F.zip_with(
-                "centroid",
-                F.expr("flatten(transform(picked_r, x -> x.centroid))"),
-                lambda a, b: a + b,
-            ),
-        )
-        .withColumn("recon_n2_r", F.expr(_SPARK_NORM2.format(a="recon_r")))
-        .select(
-            "candidate_id",
-            "cell",
-            "codes",
-            "recon",
-            "recon_n2",
-            "codes_r",
-            "recon_r",
-            "recon_n2_r",
-        )
-    )
-    return fused.persist()
-
-
 def _ivfpq_residual_branch(
     probes: DataFrame, coded_res: DataFrame
 ) -> DataFrame:
@@ -1721,17 +1616,10 @@ def _suite_shared(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         )
         # Residual-PQ stored rows (r9 IVFADC): same persist rationale
         # as ``coded`` — the encode tree must not re-inline into the
-        # pair-level cosine (see _pq_encode's shape note).
-        #
-        # r13 optimization round NOTE: fusing coded+coded_res into ONE
-        # double-width persisted pass (_suite_dual_coded) was built,
-        # proven bit-identical, and MEASURED SLOWER in 3/3 interleaved
-        # suite A/B pairs at sf0.1 (+0.6 to +5.7 s) — the two separate
-        # cached frames materialize as independent stage chains that
-        # overlap across cores inside one job, while the fused single
-        # stage serializes the doubled per-row HOF work. Same overlap
-        # finding as the minhash candidates subtree (dedup.py). The
-        # fused helper stays (equality-pinned) as the measured record.
+        # pair-level cosine (see _pq_encode's shape note). It stays a
+        # frame of its own: the two cached frames overlap across cores
+        # inside one job, and one fused pass over both measured slower
+        # (r13, 3/3 A/B pairs at sf0.1).
         coded_res = _residual_coded(assigned, centroids).persist()
         shared = {
             "corpus": corpus,

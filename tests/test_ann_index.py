@@ -45,6 +45,21 @@ def _rows(df):
     )
 
 
+def _scanned_panel(spark, cells_path):
+    """The health panel computed independently of the engine's footer
+    reader: one Spark scan of the cells table, rows counted per cell
+    and files counted by ``input_file_name`` (projected below the
+    aggregate: Spark rejects the non-deterministic expression as an
+    aggregate argument, but a Project may hold it)."""
+    cells = spark.read.parquet(cells_path).select(
+        "cell", F.input_file_name().alias("_file")
+    )
+    return cells.groupBy("cell").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.countDistinct("_file").alias("n_files"),
+    )
+
+
 def _brute_force(corpus, queries):
     from pyspark.sql import Window
 
@@ -1645,11 +1660,11 @@ def test_footer_stats_equal_row_scan_stats(
     spark, sf_correctness_dir, tmp_path
 ):
     """r9 verdict "what's wrong" #2: the health panel should cost
-    O(files), not O(rows). The footer mode (default) reads per-file
-    row counts from parquet footers in one Arrow-batched pass over the
-    (cell, file) listing — zero data pages — and must be
-    VALUE-IDENTICAL to the storage-agnostic row-scan mode, on a fresh
-    index and after appends fragment the cells."""
+    O(files), not O(rows). The panel is summed on the driver from the
+    parquet footers of the pinned cell listing — zero data pages — and
+    must be VALUE-IDENTICAL to per-cell row and file counts this test
+    scans itself, on a fresh index and after appends fragment the
+    cells."""
     from retail_datawarehouse_spark.operators.ann_index import (
         ivf_index_stats,
     )
@@ -1658,15 +1673,13 @@ def test_footer_stats_equal_row_scan_stats(
     idx = str(tmp_path / "ivf_stats")
     store_ivf_index(corpus, idx, cells=IVF_CELLS)
 
-    def panel(mode):
-        return sorted(
-            (r.cell, r.n_rows, r.n_files)
-            for r in ivf_index_stats(spark, idx, mode=mode).collect()
-        )
+    def panel(df):
+        return sorted((r.cell, r.n_rows, r.n_files) for r in df.collect())
 
-    fresh_footer = panel("footer")
-    assert fresh_footer == panel("scan")
-    assert sum(r[1] for r in fresh_footer) == corpus.count()
+    scanned = _scanned_panel(spark, f"{idx}/cells")
+    fresh = panel(ivf_index_stats(spark, idx))
+    assert fresh == panel(scanned)
+    assert sum(r[1] for r in fresh) == corpus.count()
     # fragment: appends leave >=1 file per landed cell per batch
     batch = corpus.filter(F.col("id") % 13 == 0)
     for i in range(3):
@@ -1676,20 +1689,15 @@ def test_footer_stats_equal_row_scan_stats(
             ),
             idx,
         )
-    grown_footer = panel("footer")
-    assert grown_footer == panel("scan")
-    assert max(r[2] for r in grown_footer) >= 4  # fragmentation visible
+    grown = panel(ivf_index_stats(spark, idx))
+    assert grown == panel(_scanned_panel(spark, f"{idx}/cells"))
+    assert max(r[2] for r in grown) >= 4  # fragmentation visible
     # schema parity (names + types; nullability flags may differ
-    # between a footer sum and a scan count): drop-in interchangeable
-    def shape(mode):
-        return [
-            (f.name, f.dataType)
-            for f in ivf_index_stats(spark, idx, mode=mode).schema
-        ]
+    # between a footer sum and a scan count): a drop-in for the scan
+    def shape(df):
+        return [(f.name, f.dataType) for f in df.schema]
 
-    assert shape("footer") == shape("scan")
-    with pytest.raises(ValueError, match="mode"):
-        ivf_index_stats(spark, idx, mode="rows")
+    assert shape(ivf_index_stats(spark, idx)) == shape(scanned)
 
 
 def test_footer_stats_through_explicit_pyarrow_filesystem(
@@ -1697,20 +1705,22 @@ def test_footer_stats_through_explicit_pyarrow_filesystem(
 ):
     """Object-store readiness for the health panel (the r10 residual,
     made concrete): ``ivf_index_stats(filesystem=...)`` routes the
-    CURRENT read, the cell-file listing, and every executor-side footer
-    open through an explicit ``pyarrow.fs.FileSystem``. Pinned with a
+    CURRENT read, the cell-file listing, and every footer open through
+    an explicit ``pyarrow.fs.FileSystem``. Pinned with a
     ``SubTreeFileSystem`` rooted ABOVE the index — the index path the
     call receives does not exist on the local OS filesystem, so any
     accidental os/glob/open fallback fails loudly — and values must be
-    identical to the default footer and scan modes, fresh and after
-    fragmenting appends. Also pins: generation resolution through the
-    FS (post-compaction gen-N layout) and the scan+filesystem
-    rejection."""
+    identical to the default POSIX panel and to per-cell counts this
+    test scans itself, fresh and after fragmenting appends. Also pins
+    generation resolution through the FS (post-compaction gen-N
+    layout) and that a missing cells table raises FileNotFoundError
+    through either control plane."""
     import pyarrow.fs as pafs
 
     from retail_datawarehouse_spark.operators.ann_index import (
         compact_ivf_index,
         ivf_index_stats,
+        open_ivf_index,
     )
 
     corpus, _ = _fixture(spark, sf_correctness_dir)
@@ -1728,18 +1738,134 @@ def test_footer_stats_through_explicit_pyarrow_filesystem(
         return sorted((r.cell, r.n_rows, r.n_files) for r in df.collect())
 
     via_fs = panel(ivf_index_stats(spark, rel, filesystem=subfs))
-    assert via_fs == panel(ivf_index_stats(spark, idx, mode="footer"))
-    assert via_fs == panel(ivf_index_stats(spark, idx, mode="scan"))
+    assert via_fs == panel(ivf_index_stats(spark, idx))
+    assert via_fs == panel(_scanned_panel(spark, f"{idx}/cells"))
     # generation resolution through the FS: compaction flips CURRENT
     # to a gen-N layout and the FS path must follow it
     compact_ivf_index(spark, idx)
     via_fs2 = panel(ivf_index_stats(spark, rel, filesystem=subfs))
-    assert via_fs2 == panel(ivf_index_stats(spark, idx, mode="footer"))
+    assert via_fs2 == panel(ivf_index_stats(spark, idx))
+    cells_path = open_ivf_index(spark, idx, persist=False).cells_path
+    assert via_fs2 == panel(_scanned_panel(spark, cells_path))
     assert all(r[2] == 1 for r in via_fs2)  # compacted: 1 file/cell
-    with pytest.raises(ValueError, match="footer"):
-        ivf_index_stats(spark, rel, mode="scan", filesystem=subfs)
     with pytest.raises(FileNotFoundError, match="cells"):
         ivf_index_stats(spark, "nope", filesystem=subfs).collect()
+    with pytest.raises(FileNotFoundError, match="cells"):
+        ivf_index_stats(spark, str(tmp_path / "nope")).collect()
+
+
+def _scanned_report(spark, idx):
+    """The sweep's metadata keys computed with Spark scans of the
+    committed generation: the scanned panel, the counted centroid rows
+    and the counted tombstone rows."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        open_ivf_index,
+    )
+
+    cells_path = open_ivf_index(spark, idx, persist=False).cells_path
+    root = cells_path[: -len("/cells")]
+    panel = [
+        (r.n_rows, r.n_files)
+        for r in _scanned_panel(spark, cells_path).collect()
+    ]
+    k = spark.read.parquet(f"{root}/centroids").count()
+    ts = f"{root}/tombstones"
+    tombstones = (
+        spark.read.schema("id long").parquet(ts).count()
+        if glob.glob(f"{ts}/*.parquet")
+        else 0
+    )
+    mean = sum(n for n, _ in panel) / len(panel)
+    return {
+        "cells": len(panel),
+        "k": k,
+        "empty_cells": k - len(panel),
+        "max_files": max(f for _, f in panel),
+        "skew": round(max(n for n, _ in panel) / mean, 4),
+        "tombstones": tombstones,
+    }
+
+
+def test_maintain_report_equals_a_spark_scan_of_the_index(
+    spark, sf_correctness_dir, tmp_path
+):
+    """Every metadata key of the sweep's report — read from footers on
+    the driver — equals the same key computed from Spark scans of the
+    committed generation: on a fresh index, after appends plus
+    deletes, and after the sweep compacts (where ``tombstones`` is the
+    debt left in the new generation)."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        delete_from_ivf_index,
+        maintain_ivf_index,
+    )
+
+    corpus, _ = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "ivf_report")
+    store_ivf_index(corpus, idx, cells=IVF_CELLS, pq=True)
+
+    def sweep(**kw):
+        report = maintain_ivf_index(
+            spark, idx, max_files_per_cell=10**6, **kw
+        )
+        keys = ("cells", "k", "empty_cells", "max_files", "skew", "tombstones")
+        return {key: report[key] for key in keys}, report
+
+    got, report = sweep()
+    assert got == _scanned_report(spark, idx)
+    assert not report["compacted"] and not report["rebuilt"]
+    for i in range(2):
+        append_to_ivf_index(
+            corpus.filter(F.col("id") % 11 == i).select(
+                (F.col("id") + (i + 1) * 1_000_000).alias("id"), "emb"
+            ),
+            idx,
+        )
+        delete_from_ivf_index(corpus.filter(F.col("id") % 19 == i), idx)
+    got, _ = sweep()
+    want = _scanned_report(spark, idx)
+    assert got == want and want["tombstones"] > 0 and want["max_files"] > 1
+    # a compaction clears the debt; the report's tombstones are those
+    # of the generation the sweep committed
+    got, report = sweep(max_tombstones=0)
+    assert report["compacted"]
+    assert got["tombstones"] == _scanned_report(spark, idx)["tombstones"] == 0
+
+
+def test_noop_maintain_runs_no_spark_job(spark, sf_correctness_dir, tmp_path):
+    """A sweep that decides to do nothing reads only the coordinator's
+    listing and parquet footers: on a fragmented, tombstoned index it
+    leaves no job in its job group. The same group then records the
+    jobs of a scan, so the zero is not a tracking artefact."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        delete_from_ivf_index,
+        maintain_ivf_index,
+    )
+
+    corpus, _ = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "ivf_noop")
+    store_ivf_index(corpus, idx, cells=IVF_CELLS)
+    for i in range(2):
+        append_to_ivf_index(
+            corpus.filter(F.col("id") % 13 == i).select(
+                (F.col("id") + (i + 1) * 1_000_000).alias("id"), "emb"
+            ),
+            idx,
+        )
+    delete_from_ivf_index(corpus.filter(F.col("id") % 31 == 0), idx)
+    sc = spark.sparkContext
+    group = "noop-maintain-sweep"
+    sc.setJobGroup(group, "no-op maintain_ivf_index")
+    try:
+        report = maintain_ivf_index(spark, idx, max_files_per_cell=10**6)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        _scanned_panel(spark, f"{idx}/cells").collect()
+        scan_jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not report["compacted"] and report["max_files"] > 1
+    assert report["tombstones"] > 0
+    assert jobs == [], jobs
+    assert scan_jobs, "the job group recorded nothing"
 
 
 def test_nprobe_all_is_exact_even_with_empty_cells(
@@ -1750,6 +1876,11 @@ def test_nprobe_all_is_exact_even_with_empty_cells(
     Lloyd cells empty (fewer cell directories than centroids), so a
     caller counting directories under-probes — the bug class the
     autopilot test caught; "all" closes it API-side."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        maintain_ivf_index,
+        open_ivf_index,
+    )
+
     corpus, queries = _fixture(spark, sf_correctness_dir)
     idx = str(tmp_path / "ivf_all")
     store_ivf_index(corpus, idx)  # auto cells
@@ -1761,6 +1892,12 @@ def test_nprobe_all_is_exact_even_with_empty_cells(
     # must equal the explicit centroid count
     assert _rows(got) == _rows(query_ivf_index(queries, idx, nprobe=k_cents))
     assert k_dirs <= k_cents
+    # K from the centroid sidecar's footers (the handle's state and
+    # the sweep's report) equals the counted centroid rows
+    report = maintain_ivf_index(spark, idx, max_files_per_cell=10**6)
+    assert not report["compacted"]
+    assert open_ivf_index(spark, idx, persist=False).state.k == report["k"]
+    assert report["k"] == k_cents
     with pytest.raises(ValueError, match="nprobe"):
         query_ivf_index(queries, idx, nprobe="full")
 

@@ -91,17 +91,19 @@ def test_full_lifecycle_through_subtree_coordinator(spark, tmp_path):
     )
     assert 9000 in {r.candidate_id for r in after.collect()}
 
-    # stats: footer mode routes through the coordinator's own
-    # filesystem; scan mode reads via the mapped Spark paths — the two
-    # must stay value-identical on the coordinator-backed index too
+    # stats: the footers are read through the coordinator's own
+    # filesystem; a Spark scan reads via the mapped Spark paths — the
+    # two must stay value-identical on the coordinator-backed index too
+    from tests.test_ann_index import _scanned_panel
+
     foot = {
         (r.cell, r.n_rows, r.n_files)
         for r in ivf_index_stats(spark, idx, coordinator=co).collect()
     }
     scan = {
         (r.cell, r.n_rows, r.n_files)
-        for r in ivf_index_stats(
-            spark, idx, mode="scan", coordinator=co
+        for r in _scanned_panel(
+            spark, co.spark_path(f"{idx}/cells")
         ).collect()
     }
     assert foot == scan and foot
@@ -305,9 +307,11 @@ def test_contract_kit_green_on_all_shipped_coordinators(spark, tmp_path):
 
 def test_contract_kit_red_on_broken_coordinators(tmp_path):
     """The kit must FAIL a coordinator that violates the protocol —
-    and name the violated clause. Two deliberate breaks: a no-op lock
-    (no mutual exclusion) and a recursive cell listing that sweeps up
-    _temporary debris (the late-fold poisoning class)."""
+    and name the violated clause. Deliberate breaks: a no-op lock (no
+    mutual exclusion), a recursive cell listing that sweeps up
+    _temporary debris (the late-fold poisoning class), a listed publish
+    tmp, footer row counts that include a hidden tmp file, and a lease
+    that never expires."""
     import glob as _glob
     from contextlib import contextmanager
 
@@ -352,6 +356,23 @@ def test_contract_kit_red_on_broken_coordinators(tmp_path):
 
     with pytest.raises(AssertionError, match="parquet_publish"):
         run_coordinator_contract(ListedTmp(), str(tmp_path / "listed"))
+
+    class CountsTmp(PosixCoordinator):
+        def footer_rows(self, paths):
+            # reads every parquet file beside the listed ones — the
+            # hidden tmp of a died publish included
+            import pyarrow.parquet as pq
+
+            dirs = {os.path.dirname(p) for p in paths}
+            return {
+                f"{d}/{n}": pq.read_metadata(f"{d}/{n}").num_rows
+                for d in dirs
+                for n in os.listdir(d)
+                if ".parquet" in n
+            }
+
+    with pytest.raises(AssertionError, match="footer_rows"):
+        run_coordinator_contract(CountsTmp(), str(tmp_path / "tmp_rows"))
 
     from retail_datawarehouse_spark.operators.index_fs import (
         TokenLeaseCoordinator,

@@ -1812,68 +1812,3 @@ def test_canonical_per_component_keep_rule(spark):
         ).collect()
     }
     assert got_wide == got
-
-
-def test_suite_dual_coded_matches_unfused(spark, sf_dir):
-    """r13 optimization pin: the FUSED raw+residual PQ encode
-    (_suite_dual_coded — one corpus pass, one persist) is row- and
-    value-identical to the unfused forms it replaced (_pq_encode over
-    the assigned corpus; _residual_coded). Only the pass structure
-    may differ, never a value — the suite's oracle hash rides on it."""
-    from retail_datawarehouse_spark.operators.similarity import (
-        _ann_corpus,
-        _ivf_index_over,
-        _pq_encode,
-        _residual_coded,
-        _suite_dual_coded,
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = _ann_corpus(emb)
-    corpus_ie = corpus.select(
-        F.col("candidate_id").alias("id"),
-        F.col("c_emb").alias("emb"),
-        F.col("c_n2").alias("n2"),
-    )
-    assigned, centroids = _ivf_index_over(corpus_ie)
-    dual = _suite_dual_coded(corpus, assigned, centroids)
-    try:
-        old_coded = _pq_encode(
-            corpus,
-            assigned.select(
-                F.col("id").alias("candidate_id"),
-                F.col("emb").alias("c_emb"),
-                "cell",
-            ),
-            persist=False,
-        )
-        old_res = _residual_coded(assigned, centroids)
-
-        def rows(df):
-            return sorted(
-                (
-                    r.candidate_id,
-                    r.cell,
-                    tuple(r.codes),
-                    tuple(r.recon),
-                    r.recon_n2,
-                )
-                for r in df.collect()
-            )
-
-        assert rows(
-            dual.select("candidate_id", "cell", "codes", "recon", "recon_n2")
-        ) == rows(old_coded)
-        assert rows(
-            dual.select(
-                "candidate_id",
-                "cell",
-                F.col("codes_r").alias("codes"),
-                F.col("recon_r").alias("recon"),
-                F.col("recon_n2_r").alias("recon_n2"),
-            )
-        ) == rows(old_res)
-    finally:
-        dual.unpersist()
-        centroids.unpersist()
