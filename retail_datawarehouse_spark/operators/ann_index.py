@@ -33,7 +33,8 @@ v − centroid(cell) by default (r9 — Jégou's true IVFADC; the
 ``_residual`` tag on the codebook sidecar dispatches the decode, and
 reconstruction adds the already-broadcast centroid back map-side, so
 the scan shape is unchanged); ``pq_mode="raw"`` keeps whole-vector
-codes as the ``_pq_topk`` exactness twin's layout. At 100 TB the
+codes, whose full probe equals the full ADC scan ``_pq_topk``
+row-for-row (pinned by test). At 100 TB the
 float column is what you DROP (or tier to cold storage for exact
 re-rank) — kept here so one table serves both tiers, which is
 precisely what columnar storage is for.
@@ -48,9 +49,10 @@ coarse quantizer stays spherical (see ``query_ivf_index``).
 Cell count defaults to the ``√N`` occupancy rule derived IN-PLAN from
 a 1-row broadcast count (r6 verdict #5) with hash-thresholded,
 id-layout-free seeding; ``cells="fixture"`` keeps the suite's
-oracle-mirrored 16-cell builder (byte-compatible with the in-memory
-``ivf_topk`` twin — requires the suite fixture's contiguous id layout,
-which is why it is no longer the default; ADVICE r6).
+oracle-mirrored 16-cell builder (``similarity._ivf_index_over``: the
+``q_ann_topk_suite`` IVF branches serve fixture indexes, and the DuckDB
+oracle mirrors the build — it requires the suite fixture's contiguous
+id layout, which is why it is no longer the default; ADVICE r6).
 
 Index MAINTENANCE (r8, generation-unified r9): every append leaves ≥1
 file per landed cell, so a long-lived serving index accretes small
@@ -141,9 +143,8 @@ panel is the signal for it — composed end-to-end in test_ann_index's
 drift-triggered-rebuild test), not a per-batch cost. Serving
 correctness is probe-count-bounded exactly as for the built index:
 nprobe=K degrades gracefully to exact search (float path) / the full
-ADC scan (PQ path), pinned by test against brute force, the in-memory
-``_pq_topk`` (raw mode), and the suite's residual branch (residual
-mode) over the grown corpus.
+ADC scan (PQ path), pinned by test against brute force over the grown
+corpus and against the full ADC scan ``_pq_topk`` (raw mode).
 """
 
 from __future__ import annotations
@@ -398,8 +399,8 @@ def _encode_assigned(
     shuffle join between the cell and the codes. ``recon`` itself is
     NOT stored (it is a pure codebook lookup, rebuilt map-side at
     query time); its norm² is, like every other norm in the suite.
-    ``persist=False``: the coded frame is consumed exactly once by the
-    parquet write, so persisting it would leak a cached frame per
+    The coded frame stays unpersisted: the parquet write consumes it
+    exactly once, so a persist would leak a cached frame per
     store/append for the session lifetime (ADVICE r7).
 
     A ``_residual``-tagged codebook (the r9 IVFADC tier) encodes the
@@ -416,7 +417,6 @@ def _encode_assigned(
             )
         resf = _residualize(assigned, centroids)
         coded = _pq_encode(
-            resf,  # unused when packed is given
             resf.select(
                 F.col("id").alias("candidate_id"),
                 F.col("res").alias("c_emb"),
@@ -425,8 +425,7 @@ def _encode_assigned(
                 "cell",
                 "centroid",
             ),
-            packed=packed,
-            persist=False,
+            packed,
         )
         return coded.select(
             F.col("candidate_id").alias("id"),
@@ -439,7 +438,6 @@ def _encode_assigned(
             "cell",
         )
     coded = _pq_encode(
-        assigned,  # unused when packed is given
         assigned.select(
             F.col("id").alias("candidate_id"),
             F.col("emb").alias("c_emb"),
@@ -447,8 +445,7 @@ def _encode_assigned(
             "n2",
             "cell",
         ),
-        packed=packed,
-        persist=False,
+        packed,
     )
     return coded.select(
         F.col("candidate_id").alias("id"),
@@ -501,9 +498,10 @@ def store_ivf_index(
     ``cells``: ``"auto"`` (default) derives k ≈ √N in-plan with
     id-layout-free hash seeding; an explicit int uses the generalized
     hash-seeded builder; ``"fixture"`` keeps the suite's
-    oracle-mirrored 16-cell builder (byte-compatible with the
-    in-memory ``ivf_topk`` twin — assumes the suite fixture's id
-    layout, so it is opt-in, not the default; ADVICE r6). Probe cost
+    oracle-mirrored 16-cell builder (``q_ann_topk_suite``'s IVF
+    branches serve fixture indexes and its DuckDB oracle mirrors the
+    build — it assumes the suite fixture's id layout, so it is opt-in,
+    not the default; ADVICE r6). Probe cost
     is nprobe/K of the corpus in every mode, and full-probe exactness
     is cell-count-independent (pinned by test).
 
@@ -519,8 +517,9 @@ def store_ivf_index(
     curve measured raw ADC recall@3 ~0.2 on near-isotropic vectors
     with the exact-rerank tier doing all the recall work, which is
     precisely the failure residual encoding addresses.
-    ``pq_mode="raw"`` keeps whole-vector encoding (the ``_pq_topk``
-    exactness twin's layout). The codebook sidecar self-describes its
+    ``pq_mode="raw"`` keeps whole-vector encoding (the suite's
+    'ivfpq' branch; its full probe equals the full ADC scan
+    ``_pq_topk``). The codebook sidecar self-describes its
     mode (``_residual`` tag), so appends and queries dispatch without
     caller coordination.
 
@@ -2171,9 +2170,9 @@ def query_ivf_index(
     the ADC tier: the probed-cell scan reads ONLY (id, codes,
     recon_n2, cell) — column pruning never touches the float column —
     and reconstructions are rebuilt map-side as pure lookups into the
-    one broadcast codebook row, then scored with the same pinned fold
-    as ``_ivfpq_topk`` (full-probe ≡ the in-memory ``_pq_topk``,
-    pinned by test).
+    one broadcast decode row, then scored with the pinned fold
+    ``similarity._pq_adc_cosine`` (a raw index's full probe ≡ the full
+    ADC scan ``_pq_topk``, pinned by test).
 
     ``rerank=R`` (PQ path only) completes the serving story with the
     standard two-tier refinement (FAISS ``IndexRefineFlat``): the ADC

@@ -452,7 +452,7 @@ def semdedup_pairs(
         coarse_arg = coarse
     assigned0 = _nearest_cell(vs, seeds, keep=1, coarse=coarse_arg)
     # k rows hiding the assign-all pass; two consumers (both join
-    # sides) — same justified materialization boundary as ivf_index.
+    # sides) — same justified materialization boundary as _ivf_index_over.
     centroids = _fixed_point_centroids(assigned0)
     if cells == "auto":
         centroids = centroids.crossJoin(F.broadcast(params))
@@ -907,106 +907,22 @@ def _ivf_index_over(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """IVF index build over a corpus frame of (id, emb[, n2]): seed
     centroids from the first IVF_CELLS corpus vectors, one Lloyd
     iteration (assign-all → element-wise mean per cell), then final
-    cell assignment. Returns (assigned_corpus, centroids)."""
+    cell assignment. Returns (assigned_corpus, centroids). This is the
+    ``store_ivf_index(cells="fixture")`` builder, the one the suite's
+    oracle SQL mirrors."""
     seeds = corpus.filter(F.col("id") < N_QUERIES + IVF_CELLS).select(
         (F.col("id") - N_QUERIES).alias("cell"), F.col("emb").alias("centroid")
     )
     assigned0 = _nearest_cell(corpus, seeds, keep=1)
     centroids = _fixed_point_centroids(assigned0)
     # 16 rows — but its lineage is the full assign-all cross-join pass.
-    # Both downstream consumers (final corpus assignment here, query
-    # probes in ivf_topk) would otherwise replay that pass; unlike the
+    # Its downstream consumers (final corpus assignment here, the
+    # centroid sidecar write) would otherwise replay that pass; unlike the
     # minhash case (tiny subtrees, overlap wins) this boundary collapses
     # a genuinely expensive duplicate and measured faster.
     centroids = centroids.persist()
     assigned = _nearest_cell(corpus, centroids, keep=1)
     return assigned, centroids
-
-
-def ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Build the IVF index from the parquet corpus (public path; the
-    suite feeds ``_ivf_index_over`` its shared persisted corpus
-    instead).
-
-    Every step is shuffle-bounded: assignment is a broadcast cross join
-    (K small), the mean recompute shuffles K×dim aggregate rows, and
-    the output corpus gains one integer cell column — the inverted
-    file is just a partitioning key."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
-    )
-    return _ivf_index_over(corpus)
-
-
-def _ivf_topk_over(
-    q: DataFrame,
-    c: DataFrame,
-    nprobe: int,
-    index: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """IVF search over shared (query, corpus) frames in the suite's
-    column convention (query_id/q_emb/q_n2, candidate_id/c_emb/c_n2).
-    ``index`` optionally shares a prebuilt (assigned, centroids) pair
-    with the IVF×PQ branch so the Lloyd build runs once per suite."""
-    corpus = c.select(
-        F.col("candidate_id").alias("id"),
-        F.col("c_emb").alias("emb"),
-        F.col("c_n2").alias("n2"),
-    )
-    assigned, centroids = (
-        _ivf_index_over(corpus) if index is None else index
-    )
-    queries = q.select(
-        F.col("query_id").alias("id"),
-        F.col("q_emb").alias("emb"),
-        F.col("q_n2").alias("n2"),
-    )
-    # NOT fused with the corpus assignment: both sides of the
-    # cell join consume their own pass, and a shared tagged-union pass
-    # would replay the full corpus HOF work on the (broadcast) probe
-    # side too — measured slower than keeping the probe pass
-    # queries-only (10 rows).
-    probes = _nearest_cell(queries, centroids, keep=nprobe).select(
-        F.col("id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-        "cell",
-    )
-    candidates = assigned.select(
-        F.col("id").alias("candidate_id"),
-        F.col("emb").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-        "cell",
-    )
-    scored = candidates.join(F.broadcast(probes), "cell").withColumn(
-        "cosine", cosine_from_norms("q_emb", "c_emb", "q_n2", "c_n2")
-    )
-    return _per_query_topk(scored)
-
-
-def ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
-    """IVF search: route each query to its ``nprobe`` nearest cells and
-    score exactly ONLY within those cells. The candidate join is an
-    equi-join on the cell id — hash-partitioned, skew-splittable — and
-    the scored set shrinks ~K/nprobe vs brute force. nprobe=K degrades
-    gracefully to exact search (the test exploits this: cell partitions
-    must be a complete, disjoint cover of the corpus)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return _ivf_topk_over(_ann_queries(emb), _ann_corpus(emb), nprobe)
-
-
-def q_ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-partitioned ANN, nprobe=4 of 16 cells (the serving
-    configuration: ~4× fewer exact scorings than brute force). The
-    one-seeded-Lloyd-iteration index build is FIXED-DEPTH, and with
-    fixed-point centroid means it is bit-deterministic — so the whole
-    pipeline (seed → assign → recompute → reassign → probe → score) is
-    SQL-expressible and hash-checked in q_ann_topk_suite's oracle.
-    Tests additionally prove nprobe=K reproduces brute force exactly
-    (cell cover complete and disjoint) and the candidate join hashes on
-    the cell id, never a nested loop."""
-    return ivf_topk(spark, sf_dir, nprobe=IVF_NPROBE)
 
 
 def _vectorized_topk(q: DataFrame, c: DataFrame) -> DataFrame:
@@ -1165,7 +1081,7 @@ def _auto_pq_k(train: DataFrame) -> tuple[int, DataFrame]:
         cand = train.select(
             "candidate_id", "c_emb", F.col("c_emb").alias("_orig")
         )
-        coded = _pq_encode(train, cand, packed=packed, persist=False)
+        coded = _pq_encode(cand, packed)
         dot = F.expr(_SPARK_DOT.format(a="_orig", b="recon"))
         on2 = F.expr(_SPARK_NORM2.format(a="_orig"))
         row = (
@@ -1266,19 +1182,14 @@ def _pq_codebook(
     return cent.agg(F.collect_list(F.struct("s", "cell", "centroid")).alias("_cb"))
 
 
-def _pq_encode(
-    codebook_src: DataFrame,
-    cand: DataFrame,
-    packed: DataFrame | None = None,
-    persist: bool = True,
-) -> DataFrame:
+def _pq_encode(cand: DataFrame, packed: DataFrame) -> DataFrame:
     """Encode ``cand`` (candidate_id, c_emb[, passthrough cols — e.g.
-    the IVF ``cell``]) against the codebook trained on
-    ``codebook_src``'s bounded sample — or against a PREBUILT packed
-    codebook row (``packed``; the stored-index append path, where the
-    codebook is FROZEN at store time exactly like the IVF centroids).
-    Returns the PERSISTED coded frame
-    (candidate_id, *passthrough, codes, recon, recon_n2).
+    the IVF ``cell``]) against a packed codebook row (``_pq_codebook``;
+    on the stored-index store and append paths, the codebook sidecar,
+    FROZEN at store time exactly like the IVF centroids). Returns the
+    plain coded frame (candidate_id, *passthrough, codes, recon,
+    recon_n2); a caller that scores it per (query, candidate) pair
+    persists it (``_pq_topk``), the store/append paths write it once.
 
     One shared per-subspace argmin ("picked") carries BOTH the code
     and its centroid, so codes / recon / recon_n2 are cheap
@@ -1288,23 +1199,7 @@ def _pq_encode(
     duplicated work at ~3× one pass (measured: a naive
     codes-then-lookup formulation re-inlined the FULL encode tree
     into the pair-level cosine — once per (query, candidate) pair,
-    91 s at sf0.1 vs ~2.6 s for this shape).
-
-    The persist is a CORRECTNESS-OF-SHAPE boundary for the IN-MEMORY
-    suite path, not a cache nicety: without it the encode tree inlines
-    into the pair-level cosine and is re-evaluated once per
-    (query, candidate) pair — and the expression is big enough to
-    knock the projection out of whole-stage codegen. In production the
-    codes/recon columns are the STORED index — reading them
-    materialized is the design (see
-    ``ann_index.store_ivf_index(pq=True)``, which writes exactly this
-    frame cell-partitioned). The STORE/APPEND paths pass
-    ``persist=False`` (ADVICE r7): there the frame is consumed exactly
-    once by a parquet write, so a persist would only leak a cached
-    frame for the session lifetime — accruing across incremental
-    appends in a long-lived serving session."""
-    if packed is None:
-        packed = _pq_codebook(codebook_src)
+    91 s at sf0.1 vs ~2.6 s for this shape)."""
     l2 = _SPARK_L2.format(a="element_at(subs, s + 1)", b="e.centroid")
     extras = [c for c in cand.columns if c not in ("candidate_id", "c_emb")]
     # Position-addressable codebook (r10): the packed row is COMPLETE
@@ -1344,15 +1239,16 @@ def _pq_encode(
         .withColumn("recon_n2", F.expr(_SPARK_NORM2.format(a="recon")))
         .select("candidate_id", *extras, "codes", "recon", "recon_n2")
     )
-    return coded.persist() if persist else coded
+    return coded
 
 
 def _pq_adc_cosine() -> F.Column:
-    """The ADC scoring expression shared by the full-scan and
-    IVF-pruned PQ paths: float query against the reconstruction, with
-    both norms precomputed below the join — bit-identical between the
-    two paths by construction (full-probe ≡ full-scan is pinned by
-    test)."""
+    """The ADC scoring expression shared by the full scan
+    (``_pq_topk``) and the stored index's ADC tier
+    (``ann_index.query_ivf_index(pq=True)``): float query against the
+    reconstruction, with both norms precomputed below the join —
+    bit-identical between the two by construction (the stored raw
+    tier's full probe ≡ the full scan is pinned by test)."""
     return F.expr(_SPARK_DOT.format(a="q_emb", b="recon")) / (
         F.sqrt(F.col("q_n2")) * F.sqrt(F.col("recon_n2"))
     )
@@ -1373,12 +1269,15 @@ def _pq_topk(q: DataFrame, c: DataFrame) -> DataFrame:
     column (8 bytes/vector) is what the serving tier stores and scans —
     the float corpus is only read at train/encode time.
 
-    THIS IS THE EXACTNESS TWIN, NOT THE SERVING PATH (r6 verdict #1):
-    the Q×N ADC scan is linear in the corpus, which is exactly the
-    term IVF pruning exists to cut — the headline suite serves the
-    composed ``_ivfpq_topk`` (probe nprobe cells, score codes only
-    there), and this full scan remains as the nprobe=K equivalence
-    baseline the pruned path is pinned against.
+    THIS IS THE EXACTNESS BASELINE, NOT THE SERVING PATH (r6 verdict
+    #1): the Q×N ADC scan is linear in the corpus, which is exactly the
+    term IVF pruning exists to cut — serving probes the stored index
+    (``ann_index.query_ivf_index(pq=True)``: nprobe cells, codes only),
+    and this full scan is what the stored raw tier's full probe is
+    pinned against. The coded frame is persisted: without it the
+    encode tree inlines into the pair-level cosine and is re-evaluated
+    once per (query, candidate) pair, big enough to knock the
+    projection out of whole-stage codegen.
 
     Recall honesty: at 32× compression the reconstruction error
     exceeds the tiny cosine gaps between near-uniform fixture vectors,
@@ -1388,66 +1287,10 @@ def _pq_topk(q: DataFrame, c: DataFrame) -> DataFrame:
     reconstruction-cosine floor, full codebook utilization, and rank-1
     retrieval of true near-neighbors (planted scale-invariant copies),
     which is the property a dedup/retrieval candidate generator needs."""
-    coded = _pq_encode(c, c.select("candidate_id", "c_emb"))
+    coded = _pq_encode(
+        c.select("candidate_id", "c_emb"), _pq_codebook(c)
+    ).persist()
     scored = coded.crossJoin(F.broadcast(q)).withColumn(
-        "cosine", _pq_adc_cosine()
-    )
-    return _per_query_topk(scored)
-
-
-def _ivfpq_topk(
-    q: DataFrame,
-    c: DataFrame,
-    nprobe: int = IVF_NPROBE,
-    index: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """IVF×PQ — the composed serving layout (FAISS IVFPQ; r6 verdict
-    #1): the corpus is coarse-quantized into IVF cells AND
-    product-quantized into 8 code bytes; a query routes to its nprobe
-    nearest cells and ADC-scores reconstructions ONLY there. Query
-    cost is Q × N·nprobe/K — the linear Q×N scan of ``_pq_topk``
-    becomes the probe-bounded term that survives a 100× corpus, while
-    encode (the one linear pass) is the INDEX BUILD, paid once at
-    store time, not per query (``ann_index.store_ivf_index(pq=True)``
-    persists exactly the frame built here).
-
-    nprobe=K degrades to the full ADC scan: cells are a disjoint
-    cover, so every candidate is scored exactly once with the same
-    fold — row-for-row equal to ``_pq_topk`` (pinned by test, the same
-    argument the stored-IVF full-probe test makes).
-
-    ``index`` shares a prebuilt (assigned, centroids) pair — the suite
-    passes the one it already builds for the plain-IVF branch, so the
-    Lloyd pass runs once, not twice."""
-    corpus = c.select(
-        F.col("candidate_id").alias("id"),
-        F.col("c_emb").alias("emb"),
-        F.col("c_n2").alias("n2"),
-    )
-    assigned, centroids = (
-        _ivf_index_over(corpus) if index is None else index
-    )
-    # cell rides the encode input, so codes+cell come out of ONE
-    # map-side pass over the cached corpus (assignment fold → encode
-    # fold), never an id-keyed shuffle join between the two.
-    cand = assigned.select(
-        F.col("id").alias("candidate_id"),
-        F.col("emb").alias("c_emb"),
-        "cell",
-    )
-    coded = _pq_encode(c, cand)
-    queries = q.select(
-        F.col("query_id").alias("id"),
-        F.col("q_emb").alias("emb"),
-        F.col("q_n2").alias("n2"),
-    )
-    probes = _nearest_cell(queries, centroids, keep=nprobe).select(
-        F.col("id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-        "cell",
-    )
-    scored = coded.join(F.broadcast(probes), "cell").withColumn(
         "cosine", _pq_adc_cosine()
     )
     return _per_query_topk(scored)
@@ -1528,158 +1371,6 @@ def _residual_codebook(
     )
     packed = _pq_codebook(res_sample, train=res_sample, pq_k=pq_k)
     return packed.withColumn("_residual", F.lit(True))
-
-
-def _residual_coded(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    packed: DataFrame | None = None,
-) -> DataFrame:
-    """The stored-row shape of the residual-PQ tier: (candidate_id,
-    cell, codes, recon, recon_n2) where codes quantize the residual,
-    ``recon`` is the FULL reconstruction centroid(cell) +
-    decode(codes), and recon_n2 its norm² — one map-side pass
-    (residualize → encode → add-back), no id-keyed shuffle. ``packed``
-    defaults to training on this corpus' residual sample (the build
-    path); the append path passes the FROZEN stored codebook."""
-    resf = _residualize(assigned, centroids)
-    if packed is None:
-        packed = _residual_codebook(assigned, centroids)
-    coded = _pq_encode(
-        resf,  # unused when packed is given
-        resf.select(
-            F.col("id").alias("candidate_id"),
-            F.col("res").alias("c_emb"),
-            "cell",
-            "centroid",
-        ),
-        packed=packed,
-        persist=False,
-    )
-    return coded.select(
-        "candidate_id",
-        "cell",
-        "codes",
-        F.zip_with("centroid", "recon", lambda a, b: a + b).alias("recon"),
-    ).withColumn("recon_n2", F.expr(_SPARK_NORM2.format(a="recon")))
-
-
-def _ivfpq_residual_branch(
-    probes: DataFrame, coded_res: DataFrame
-) -> DataFrame:
-    """Score the residual-reconstructions inside each query's probed
-    cells — identical join/score shape to the raw-PQ branch, only the
-    reconstruction differs (and carries most of the vector back)."""
-    scored = coded_res.join(F.broadcast(probes), "cell").withColumn(
-        "cosine", _pq_adc_cosine()
-    )
-    return _per_query_topk(scored)
-
-
-# Session-scope memo for the suite's shared persisted frames (the
-# textual.py ``_TOKENIZED_CACHE`` pattern; r7 verdict #3 — ADVICE r5
-# cache-accrual class). Keyed by (applicationId, sf_dir) so a restarted
-# session never reuses a dead frame; the dict holds tiny plan objects,
-# the DATA lives in the Spark cache and is re-registered on demand
-# after an external ``spark.catalog.clearCache()`` (bench.py clears
-# between reps — every rep must measure full computation).
-_SUITE_SHARED_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
-def _suite_shared(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The four persisted frames every ``q_ann_topk_suite`` invocation
-    needs: the corpus (one cached scan + norm fold for all six
-    branches), the IVF cell assignment + centroids (ONE Lloyd build
-    for the 'ivf' and 'ivfpq' branches — measured 6.7 s vs 9.0 s for
-    the pair built separately at sf0.1), and the PQ-coded corpus.
-    Memoized per (applicationId, sf_dir): repeat invocations in a
-    long-lived session reuse ONE registration instead of accruing dead
-    cached frames per call (r7 verdict #3 / the r5 ADVICE class)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    shared = _SUITE_SHARED_CACHE.get(key)
-    if shared is None:
-        corpus = _ann_corpus(load_table(spark, sf_dir, "embeddings")).persist()
-        corpus_ie = corpus.select(
-            F.col("candidate_id").alias("id"),
-            F.col("c_emb").alias("emb"),
-            F.col("c_n2").alias("n2"),
-        )
-        assigned, centroids = _ivf_index_over(corpus_ie)
-        assigned = assigned.persist()
-        coded = _pq_encode(
-            corpus,
-            assigned.select(
-                F.col("id").alias("candidate_id"),
-                F.col("emb").alias("c_emb"),
-                "cell",
-            ),
-        )
-        # Residual-PQ stored rows (r9 IVFADC): same persist rationale
-        # as ``coded`` — the encode tree must not re-inline into the
-        # pair-level cosine (see _pq_encode's shape note). It stays a
-        # frame of its own: the two cached frames overlap across cores
-        # inside one job, and one fused pass over both measured slower
-        # (r13, 3/3 A/B pairs at sf0.1).
-        coded_res = _residual_coded(assigned, centroids).persist()
-        shared = {
-            "corpus": corpus,
-            "assigned": assigned,
-            "centroids": centroids,
-            "coded": coded,
-            "coded_res": coded_res,
-        }
-        _SUITE_SHARED_CACHE[key] = shared
-    else:
-        for df in shared.values():
-            if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
-                df.persist()
-    return shared
-
-
-def _ivf_pair_branches(
-    q: DataFrame, shared: dict[str, DataFrame], nprobe: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three IVF-rooted suite branches — 'ivf' (exact float
-    scoring inside probed cells), 'ivfpq' (raw-vector ADC scoring of
-    PQ codes inside probed cells), and 'ivfpq_res' (residual-encoded
-    ADC, the r9 IVFADC tier) — over the memoized shared index frames
-    (``_suite_shared``) and ONE query probe pass. Bit-identical to
-    running ``_ivf_topk_over`` and ``_ivfpq_topk`` separately (the
-    shared frames are the same expressions); what sharing buys is
-    wall, not values: the Lloyd build, the corpus assignment fold, and
-    the probe chain each run once instead of three times. The
-    ``assigned`` persist is a two-consumer boundary like the centroid
-    one inside ``_ivf_index_over``."""
-    assigned, centroids = shared["assigned"], shared["centroids"]
-    q_ie = q.select(
-        F.col("query_id").alias("id"),
-        F.col("q_emb").alias("emb"),
-        F.col("q_n2").alias("n2"),
-    )
-    probes = _nearest_cell(q_ie, centroids, keep=nprobe).select(
-        F.col("id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-        "cell",
-    )
-    cand = assigned.select(
-        F.col("id").alias("candidate_id"),
-        F.col("emb").alias("c_emb"),
-        F.col("n2").alias("c_n2"),
-        "cell",
-    )
-    ivf = _per_query_topk(
-        cand.join(F.broadcast(probes), "cell").withColumn(
-            "cosine", cosine_from_norms("q_emb", "c_emb", "q_n2", "c_n2")
-        )
-    )
-    ivfpq = _per_query_topk(
-        shared["coded"].join(F.broadcast(probes), "cell").withColumn(
-            "cosine", _pq_adc_cosine()
-        )
-    )
-    ivfpq_res = _ivfpq_residual_branch(probes, shared["coded_res"])
-    return ivf, ivfpq, ivfpq_res
 
 
 def q_ann_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2456,18 +2147,13 @@ _ANN_IVFPQ_RES_SQL = f"""
 """
 
 
-# Stored-index suite branches (r13; r12 verdict #1): the engine's
-# largest module (operators/ann_index.py — the on-disk IVF×PQ index
-# with its store/delete/query lifecycle) was green only via pytest and
-# bench; the driver's HARD correctness signal never executed it. The
-# 'stored' and 'stored_adc' branches close that: the suite
-# deterministically STORES a fixture-built IVF×PQ index to a temp
-# path, DELETES a fixed id subset (``delete_from_ivf_index`` — the
-# tombstone sidecar), and serves top-k through ``query_ivf_index`` on
-# both tiers (float and residual-ADC). The fixture build is
-# byte-compatible with the in-plan 'ivf'/'ivfpq_res' branches (pinned
-# by tests/test_ann_index.py's stored-equals-in-memory twins), so the
-# oracle is each branch's existing SQL with ONE addition: the
+# Stored-index suite branches: every IVF-rooted branch serves through
+# operators/ann_index.py, so the DuckDB hash gate executes the stored
+# index's store/delete/query lifecycle. The suite STORES the fixture
+# IVF×PQ index to a temp path, DELETES a fixed id subset
+# (``delete_from_ivf_index`` — the tombstone sidecar), and serves
+# top-k through ``query_ivf_index``. The 'stored' and 'stored_adc'
+# oracles are the 'ivf' and 'ivfpq_res' SQL with ONE addition: the
 # tombstone screen, an anti-join on the deleted ids applied BEFORE
 # ranking — exactly where the serving path applies it.
 _STORED_DEL_MOD = 17
@@ -2498,73 +2184,78 @@ _ANN_STORED_ADC_SQL = _pre_rank_delete_screen(
     _ANN_IVFPQ_RES_SQL, "ivfpqres_scored"
 )
 
-# One stored suite index per (session, sf_dir) — the _suite_shared
-# memoization discipline (r7 verdict #3): repeat invocations (bench
-# reps, repeated driver calls) reuse one on-disk build instead of
-# re-storing per call. The cache holds the path AND an opened
-# persist=False handle (r13): a handle-less ``query_ivf_index`` call
-# re-opens the index — pointer read, sidecar listings, fresh parquet
-# relations (hence fresh file listings) — on EVERY invocation; the
-# suite's index is immutable after its build+delete, so one open
-# serves every repeat invocation (measured 3.00 s → 2.32 s for the
-# stored pair at sf0.1 same-box). persist=False keeps the sidecar
-# frames plain — nothing for an external clearCache to invalidate.
-# The index lives under the system temp dir (never the repo, never
-# the testdata).
-_STORED_SUITE_CACHE: dict[tuple[str, str], tuple] = {}
+# One memo per (session, sf_dir) for everything the suite builds once
+# (the textual.py ``_TOKENIZED_CACHE`` pattern; r7 verdict #3 — the
+# ADVICE r5 cache-accrual class): the persisted corpus frame, the two
+# stored fixture indexes, and their opened handles. Keyed by
+# applicationId so a restarted session never reuses a dead frame. The
+# corpus DATA lives in the Spark cache and is re-persisted on demand
+# after an external ``spark.catalog.clearCache()`` (bench.py clears
+# between reps — every rep must measure full computation). The handles
+# are persist=False: their sidecar frames are plain, so clearCache has
+# nothing of theirs to invalidate, and one open serves every repeat
+# call because the suite's indexes never change after their build and
+# delete (r13: one open instead of one per call measured 3.00 s →
+# 2.32 s for the stored pair at sf0.1). The index files live under the
+# system temp dir (never the repo, never the testdata).
+_ANN_SUITE_CACHE: dict[tuple[str, str], dict] = {}
 
 
-def _stored_suite_branches(
-    spark: SparkSession, sf_dir: str, queries: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Build-once, serve-twice: the stored index's float tier and
-    residual-ADC tier over the suite's query set, after the fixed
-    deletion batch. The ann_index import is call-time (it imports this
-    module at its own import; a module-level import here would cycle)."""
+def _suite_state(spark: SparkSession, sf_dir: str) -> dict:
+    """The suite's memo entry: ``corpus`` (the persisted candidate
+    frame the brute-force, LSH and int8-ADC branches scan) and three
+    persist=False handles. ``undeleted`` and ``deleted`` open the
+    default residual-PQ fixture index before and after the fixed
+    delete; ``raw`` opens a second fixture index stored with
+    ``pq_mode="raw"``. The ann_index import is call-time (it imports
+    this module at its own import; a module-level import here would
+    cycle)."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    state = _ANN_SUITE_CACHE.get(key)
+    if state is not None:
+        lvl = state["corpus"].storageLevel
+        if not (lvl.useMemory or lvl.useDisk):
+            state["corpus"].persist()
+        return state
+    import atexit
+    import shutil
     import tempfile
 
     from retail_datawarehouse_spark.operators.ann_index import (
         delete_from_ivf_index,
         open_ivf_index,
-        query_ivf_index,
         store_ivf_index,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _STORED_SUITE_CACHE.get(key)
-    if cached is None:
-        import atexit
-        import shutil
-
-        base = tempfile.mkdtemp(prefix="spark_graft_stored_suite_")
-        # the stored index outlives the call (memoized for bench reps /
-        # repeat driver invocations) but not the process — reap it at
-        # interpreter exit so repeated sessions don't accumulate index
-        # copies under /tmp (r13 review)
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        idx = f"{base}/idx"
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
-        )
-        store_ivf_index(corpus, idx, cells="fixture", pq=True)
-        victims = corpus.select("id").filter(
-            F.col("id") % _STORED_DEL_MOD == _STORED_DEL_REM
-        )
-        delete_from_ivf_index(victims, idx)
-        # The handle opens AFTER the delete, so its tombstone frame is
-        # the final (immutable) set — nothing ever appends or deletes
-        # again under this key, so no per-call refresh is needed.
-        handle = open_ivf_index(spark, idx, persist=False)
-        cached = (idx, handle)
-        _STORED_SUITE_CACHE[key] = cached
-    idx, handle = cached
-    q = queries.select(
-        F.col("query_id").alias("id"), F.col("q_emb").alias("emb")
+    base = tempfile.mkdtemp(prefix="spark_graft_ann_suite_")
+    # the indexes outlive the call (memoized for bench reps / repeat
+    # invocations) but not the process — reap them at interpreter
+    # exit so repeated sessions don't accumulate index copies under
+    # the temp dir
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    emb = load_table(spark, sf_dir, "embeddings")
+    vectors = emb.filter(F.col("vec_id") >= N_QUERIES).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
     )
-    flt = query_ivf_index(q, idx, nprobe=IVF_NPROBE, handle=handle)
-    adc = query_ivf_index(q, idx, nprobe=IVF_NPROBE, pq=True, handle=handle)
-    return flt, adc
+    res_idx, raw_idx = f"{base}/residual", f"{base}/raw"
+    store_ivf_index(vectors, res_idx, cells="fixture", pq=True)
+    store_ivf_index(vectors, raw_idx, cells="fixture", pq=True, pq_mode="raw")
+    # pins the tombstone listing as it is before the delete: empty
+    undeleted = open_ivf_index(spark, res_idx, persist=False)
+    delete_from_ivf_index(
+        vectors.select("id").filter(
+            F.col("id") % _STORED_DEL_MOD == _STORED_DEL_REM
+        ),
+        res_idx,
+    )
+    state = {
+        "corpus": _ann_corpus(emb).persist(),
+        "undeleted": undeleted,
+        "deleted": open_ivf_index(spark, res_idx, persist=False),
+        "raw": open_ivf_index(spark, raw_idx, persist=False),
+    }
+    _ANN_SUITE_CACHE[key] = state
+    return state
 
 
 @register(
@@ -2626,49 +2317,45 @@ def q_ann_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fold-cosine brute force — the recall baseline), 'vectorized' (the
     SAME plan with the Arrow pandas-UDF kernel — cumsum-fold
     accumulation makes it BIT-identical to the exact branch, so its
-    oracle is simply the exact CTE), 'lsh' (sign-bit bucketed, ~256× fewer
-    scorings), 'ivf' (seeded one-iteration Lloyd, nprobe=4 of 16 —
-    fully SQL-mirrored thanks to fixed-point centroid means), 'adc'
-    (float query × int8-quantized corpus with per-vector scale — the
-    memory-bound serving layout; see ``_adc_topk``), and 'ivfpq' (the
-    COMPOSED serving tier, r6 verdict #1: per-subspace trained PQ
-    codebooks, 8 code bytes per vector, scored ONLY inside each
-    query's nprobe probed IVF cells — see ``_ivfpq_topk``; the
-    full-scan ``_pq_topk`` stays as the non-headline nprobe=K
-    exactness twin), and 'ivfpq_res' (r9 — the TRUE IVFADC tier:
-    identical layout to 'ivfpq' but the codes quantize the residual
-    v − centroid(cell) and scoring reconstructs centroid +
-    decode(codes); same cell assignments, same probe pass, finer
-    reconstruction — the public-standard fix for raw-PQ's recall
-    floor, measured on the stored index's operating curve), and
-    'exact_l2' (r10 — the metric knob's brute-force squared-L2
-    ranking, ascending, under the same gate; the quantized dist² rides
-    the shared value slot), and the two STORED-INDEX lifecycle
-    branches (r13; r12 verdict #1 — ``operators/ann_index.py`` under
-    the driver's hash gate for the first time): 'stored' builds the
-    fixture IVF×PQ index ON DISK via ``store_ivf_index``, deletes the
-    fixed ``id % {mod} == {rem}`` subset via ``delete_from_ivf_index``
-    (the tombstone sidecar), and serves the float tier through
-    ``query_ivf_index`` — DPP-pruned probed-cell scan, broadcast
-    tombstone anti-join; 'stored_adc' serves the same stored index's
-    residual-ADC tier (codes-only scan). Their oracles are the
-    'ivf'/'ivfpq_res' SQL with the deleted-id screen applied before
-    ranking — exactly where the serving path applies its anti-join —
-    so the gate hash-pins the whole store→delete→query lifecycle.
-    Ranks are computed over each branch's raw score (ties broken by
-    candidate_id); the quantized value is the shared surface.
+    oracle is simply the exact CTE), 'lsh' (sign-bit bucketed, ~256×
+    fewer scorings), 'adc' (float query × int8-quantized corpus with
+    per-vector scale — the memory-bound serving layout; see
+    ``_adc_topk``), 'exact_l2' (r10 — the metric knob's brute-force
+    squared-L2 ranking, ascending; the quantized dist² rides the shared
+    value slot), and five branches served by the STORED index
+    (``operators/ann_index.py``) at nprobe=4 of 16 cells:
 
-    The six branches share ONE persisted corpus frame (candidate id +
-    embedding + precomputed norm²): without it each branch re-reads the
-    parquet scan and re-folds the norms — scans and re-folds per
-    branch collapse to 1 cached scan (the ADC code columns derive
-    map-side from the same cache). The 'ivf' and 'ivfpq' branches
-    additionally share ONE IVF index build (assigned + persisted
-    centroids), so the Lloyd pass runs once per suite, not twice. The
-    10-row query side is rebuilt per branch (broadcast, negligible).
-    All shared frames are memoized per (session, sf_dir) via
-    ``_suite_shared`` — repeat invocations reuse one registration
-    instead of accruing dead cached frames (r7 verdict #3)."""
+    - 'ivf' (float tier) and 'ivfpq_res' (residual-ADC tier, the r9
+      true IVFADC: codes quantize v − centroid(cell), scoring
+      reconstructs centroid + decode(codes)) read the default
+      residual-PQ fixture index through the handle opened BEFORE the
+      fixed delete. That handle pinned an empty tombstone listing, so
+      these branches serve the index as built, and their oracles are
+      the plain seeded one-iteration Lloyd chain (fully SQL-mirrored
+      thanks to fixed-point centroid means).
+    - 'stored' (float tier) and 'stored_adc' (residual-ADC tier) read
+      the SAME index through the handle opened AFTER the fixed
+      ``id % 17 == 3`` delete (``delete_from_ivf_index``, the
+      tombstone sidecar). Their oracles are the 'ivf'/'ivfpq_res' SQL
+      with the deleted-id screen applied before ranking — exactly where
+      the serving path applies its anti-join — so the gate hash-pins
+      the whole store → delete → query lifecycle.
+    - 'ivfpq' (raw-vector ADC: per-subspace PQ codebooks, 8 code bytes
+      per vector) reads a second fixture index stored with
+      ``pq_mode="raw"``; one PQ index cannot serve both encodings.
+
+    Every stored branch is a DPP-pruned probed-cell scan; the ADC
+    tiers read codes only. Ranks are computed over each branch's raw
+    score (ties broken by candidate_id); the quantized value is the
+    shared surface.
+
+    The brute-force, LSH and int8-ADC branches share ONE persisted
+    corpus frame (candidate id + embedding + precomputed norm²), so the
+    parquet scan and the norm folds run once, not per branch. The
+    corpus, both indexes and their handles are memoized per
+    (session, sf_dir) via ``_suite_state``: repeat invocations reuse
+    one registration and one on-disk build instead of accruing dead
+    cached frames or re-storing per call (r7 verdict #3)."""
 
     def q6(df: DataFrame, method: str) -> DataFrame:
         return df.select(
@@ -2681,13 +2368,27 @@ def q_ann_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
         )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    shared = _suite_shared(spark, sf_dir)
-    corpus = shared["corpus"]
-    queries = _ann_queries(emb)
-    ivf_branch, ivfpq_branch, ivfpq_res_branch = _ivf_pair_branches(
-        queries, shared, IVF_NPROBE
+    from retail_datawarehouse_spark.operators.ann_index import (
+        query_ivf_index,
     )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    state = _suite_state(spark, sf_dir)
+    corpus = state["corpus"]
+    queries = _ann_queries(emb)
+    q = queries.select(
+        F.col("query_id").alias("id"), F.col("q_emb").alias("emb")
+    )
+
+    def served(key: str, method: str, pq: bool) -> DataFrame:
+        h = state[key]
+        return q6(
+            query_ivf_index(
+                q, h.index_dir, nprobe=IVF_NPROBE, pq=pq, handle=h
+            ),
+            method,
+        )
+
     # 'exact_l2' (r10): the metric knob's brute-force L2 ranking under
     # the driver hash gate — squared-distance expansion q_n2 − 2·dot +
     # c_n2 over the SAME persisted corpus norms (no new folds below the
@@ -2714,20 +2415,15 @@ def q_ann_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
         )
     )
-    # Stored-index lifecycle branches (r13; r12 verdict #1): store →
-    # delete → serve through operators/ann_index.py — the on-disk
-    # build is memoized per (session, sf_dir) and the fixed deletion
-    # screen mirrors in the oracle as a pre-rank candidate filter.
-    stored_flt, stored_adc = _stored_suite_branches(spark, sf_dir, queries)
     return (
         q6(_exact_topk(queries, corpus), "exact")
         .unionByName(q6(_vectorized_topk(queries, corpus), "vectorized"))
         .unionByName(q6(_lsh_topk(queries, corpus), "lsh"))
-        .unionByName(q6(ivf_branch, "ivf"))
+        .unionByName(served("undeleted", "ivf", pq=False))
         .unionByName(q6(_adc_topk(queries, corpus), "adc"))
-        .unionByName(q6(ivfpq_branch, "ivfpq"))
-        .unionByName(q6(ivfpq_res_branch, "ivfpq_res"))
+        .unionByName(served("raw", "ivfpq", pq=True))
+        .unionByName(served("undeleted", "ivfpq_res", pq=True))
         .unionByName(l2_topk)
-        .unionByName(q6(stored_flt, "stored"))
-        .unionByName(q6(stored_adc, "stored_adc"))
+        .unionByName(served("deleted", "stored", pq=False))
+        .unionByName(served("deleted", "stored_adc", pq=True))
     )

@@ -40,3 +40,19 @@ def builder(name: str):
     if name in fb:
         return fb[name]
     raise KeyError(name)
+
+
+def ann_vectors(spark, sf_dir: str):
+    """The ANN suite's fixture split as (id, emb) frames: the corpus
+    (vec_id ≥ N_QUERIES) and the N_QUERIES query vectors — the input
+    shape of ``ann_index.store_ivf_index`` and ``query_ivf_index``."""
+    from pyspark.sql import functions as F
+
+    from retail_datawarehouse_spark.operators.similarity import N_QUERIES
+    from retail_datawarehouse_spark.sources.readers import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cols = (F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
+    corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(*cols)
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(*cols)
+    return corpus, queries

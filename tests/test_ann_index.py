@@ -1,6 +1,7 @@
 """Stored IVF index (operators/ann_index.py): serving from the
-cell-partitioned on-disk table equals the in-memory IVF search, probes
-prune unprobed cell directories (DPP), and the frozen-centroid
+cell-partitioned on-disk table equals brute force at full probe and
+the DuckDB oracle of the suite's IVF branches, probes prune unprobed
+cell directories (DPP), and the frozen-centroid
 incremental append is correct (full-probe equals brute force over the
 grown corpus; appended vectors are retrievable at nprobe=1) and
 surgical (only landed-in cells gain files)."""
@@ -21,28 +22,22 @@ from retail_datawarehouse_spark.operators.ann_index import (
 from retail_datawarehouse_spark.operators.similarity import (
     IVF_CELLS,
     IVF_NPROBE,
-    N_QUERIES,
     _nearest_cell,
-    ivf_topk,
 )
-from retail_datawarehouse_spark.sources.readers import load_table
-
-
-def _fixture(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
-    )
-    return corpus, queries
+from tests.builders import ann_vectors as _fixture
 
 
 def _rows(df):
     return sorted(
         (r.query_id, r.candidate_id, r.cosine, r.rank) for r in df.collect()
     )
+
+
+def _oracle_rows(sf_dir, sql):
+    """A suite branch's DuckDB oracle rows, in ``_rows`` form."""
+    from tests.oracle import duck_connection
+
+    return sorted(duck_connection(sf_dir).execute(sql).fetchall())
 
 
 def _scanned_panel(spark, cells_path):
@@ -92,18 +87,21 @@ def _brute_force(corpus, queries):
     )
 
 
-def test_stored_index_serving_equals_in_memory_ivf(
+def test_stored_fixture_index_serves_the_ivf_oracle(
     spark, sf_correctness_dir, tmp_path
 ):
-    """cells='fixture' is the oracle-twin mode: byte-compatible with
-    the in-memory ivf_topk build (it is no longer the default — the
-    default is the √N auto rule; r6 verdict #5 / ADVICE r6)."""
+    """cells='fixture' is the oracle-mirrored mode: its float tier at
+    nprobe=4 serves exactly the rows of the suite's 'ivf' DuckDB
+    oracle, the SQL mirror of the seeded one-iteration Lloyd build (it
+    is no longer the default — the default is the √N auto rule; r6
+    verdict #5 / ADVICE r6)."""
+    from retail_datawarehouse_spark.operators.similarity import _ANN_IVF_SQL
+
     corpus, queries = _fixture(spark, sf_correctness_dir)
     idx = str(tmp_path / "ivf")
     store_ivf_index(corpus, idx, cells="fixture")
     got = query_ivf_index(queries, idx, nprobe=IVF_NPROBE)
-    want = ivf_topk(spark, sf_correctness_dir, nprobe=IVF_NPROBE)
-    assert _rows(got) == _rows(want)
+    assert _rows(got) == _oracle_rows(sf_correctness_dir, _ANN_IVF_SQL)
     # the index landed as one directory per cell — the inverted file
     # IS the partitioning
     cells = glob.glob(f"{idx}/cells/cell=*")
@@ -1061,22 +1059,20 @@ def test_flat_route_knob_changes_small_nprobe_probes_only(
         query_ivf_index(queries, idx, nprobe=2, route="bogus").collect()
 
 
-def test_stored_residual_pq_full_probe_equals_in_memory_residual(
+def test_stored_residual_pq_serves_the_ivfadc_oracle(
     spark, sf_correctness_dir, tmp_path
 ):
     """The r9 IVFADC tier, stored: ``pq=True`` now defaults to
     ``pq_mode="residual"`` — codes quantize v − centroid(cell), the
     serving scan still reads only (id, codes, recon_n2, cell), and
-    reconstruction adds the broadcast centroid back map-side. Full
-    probe must reproduce the in-memory residual branch (the suite's
-    'ivfpq_res', same fixture build) row-for-row; the plan must keep
-    the compression contract (codes read, emb never, DPP on the scan);
-    and full probe + large R must still collapse to brute force."""
-    from retail_datawarehouse_spark.operators.ann_index import _with_n2
+    reconstruction adds the broadcast centroid back map-side. At
+    nprobe=4 it must serve exactly the rows of the suite's 'ivfpq_res'
+    DuckDB oracle (the SQL mirror of the same fixture build, residual
+    codebook and encode); the plan must keep the compression contract
+    (codes read, emb never, DPP on the scan); and full probe + large R
+    must still collapse to brute force."""
     from retail_datawarehouse_spark.operators.similarity import (
-        _ivf_index_over,
-        _ivfpq_residual_branch,
-        _residual_coded,
+        _ANN_IVFPQ_RES_SQL,
     )
 
     corpus, queries = _fixture(spark, sf_correctness_dir)
@@ -1084,19 +1080,8 @@ def test_stored_residual_pq_full_probe_equals_in_memory_residual(
     store_ivf_index(corpus, idx, cells="fixture", pq=True)
     packed = spark.read.parquet(f"{idx}/codebook")
     assert "_residual" in packed.columns  # self-describing sidecar
-    got = query_ivf_index(queries, idx, nprobe=IVF_CELLS, pq=True)
-    assigned, centroids = _ivf_index_over(_with_n2(corpus))
-    coded_res = _residual_coded(assigned, centroids)
-    probes = _nearest_cell(
-        _with_n2(queries), centroids, keep=IVF_CELLS
-    ).select(
-        F.col("id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("n2").alias("q_n2"),
-        "cell",
-    )
-    want = _ivfpq_residual_branch(probes, coded_res)
-    assert _rows(got) == _rows(want)
+    got = query_ivf_index(queries, idx, nprobe=IVF_NPROBE, pq=True)
+    assert _rows(got) == _oracle_rows(sf_correctness_dir, _ANN_IVFPQ_RES_SQL)
     plan = (
         query_ivf_index(queries, idx, nprobe=2, pq=True)
         ._jdf.queryExecution()
@@ -1138,8 +1123,10 @@ def test_residual_reconstruction_beats_raw_at_same_code_budget(
     from retail_datawarehouse_spark.operators.similarity import (
         _cosine_expr,
         _ivf_index_over,
+        _pq_codebook,
         _pq_encode,
-        _residual_coded,
+        _residual_codebook,
+        _residualize,
     )
 
     corpus, _ = _fixture(spark, sf_correctness_dir)
@@ -1162,8 +1149,19 @@ def test_residual_reconstruction_beats_raw_at_same_code_budget(
     cand = corpus.select(
         F.col("id").alias("candidate_id"), F.col("emb").alias("c_emb")
     )
-    raw = _pq_encode(cand, cand, persist=False)
-    res = _residual_coded(assigned, centroids)
+    raw = _pq_encode(cand, _pq_codebook(cand))
+    # residual encode, then centroid(cell) + decode(codes) back
+    res = _pq_encode(
+        _residualize(assigned, centroids).select(
+            F.col("id").alias("candidate_id"),
+            F.col("res").alias("c_emb"),
+            "centroid",
+        ),
+        _residual_codebook(assigned, centroids),
+    ).select(
+        "candidate_id",
+        F.zip_with("centroid", "recon", lambda a, b: a + b).alias("recon"),
+    )
     c_raw = mean_recon_cosine(raw)
     c_res = mean_recon_cosine(res)
     # deterministic (fixed-point centroids + deterministic encode):

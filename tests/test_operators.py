@@ -306,40 +306,57 @@ def test_sketches_bounded_error_vs_exact(spark, sf_dir):
             assert abs(got - want) / want < 0.02, (prio, got, want)
 
 
-def test_ivf_full_probe_reproduces_bruteforce(spark, sf_dir):
+@pytest.fixture(scope="module")
+def fixture_ivf_index(spark, sf_dir, tmp_path_factory):
+    """The suite's IVF serving configuration, stored: a
+    ``cells="fixture"`` index over the smoke corpus (the builder the
+    suite's 'ivf' branch serves and its oracle mirrors). Returns the
+    index dir and the query vectors as (id, emb)."""
+    from tests.builders import ann_vectors
+
+    from retail_datawarehouse_spark.operators.ann_index import store_ivf_index
+
+    corpus, queries = ann_vectors(spark, sf_dir)
+    idx = str(tmp_path_factory.mktemp("ivf_fixture") / "idx")
+    store_ivf_index(corpus, idx, cells="fixture")
+    return idx, queries
+
+
+def test_ivf_full_probe_reproduces_bruteforce(spark, sf_dir, fixture_ivf_index):
     """nprobe=K must give EXACTLY the brute-force top-k: the cell
     assignment is a complete disjoint cover of the corpus, so probing
     every cell scores every candidate exactly once. This pins the IVF
     machinery (routing, inverted-file join, dedup-free union) with no
     recall hand-waving."""
-    from retail_datawarehouse_spark.operators.similarity import (
-        IVF_CELLS,
-        ivf_topk,
-    )
-    from retail_datawarehouse_spark.registry import catalog
+    from retail_datawarehouse_spark.operators.ann_index import query_ivf_index
 
+    idx, queries = fixture_ivf_index
     exact = builder("q_ann_cosine_topk")(spark, sf_dir)
-    full = ivf_topk(spark, sf_dir, nprobe=IVF_CELLS)
+    full = query_ivf_index(queries, idx, nprobe="all")
     a = sorted(map(tuple, exact.collect()))
     b = sorted(map(tuple, full.collect()))
     assert a == b
 
 
-def test_ivf_probed_returns_full_topk_with_true_cosines(spark, sf_dir):
+def test_ivf_probed_returns_full_topk_with_true_cosines(
+    spark, sf_dir, fixture_ivf_index
+):
     """nprobe=4: every query still gets TOP_K rows (cells are dense
     enough), and every reported cosine equals the independently
     recomputed exact cosine for that pair (the approximation is WHICH
     pairs get scored, never the score itself)."""
+    from retail_datawarehouse_spark.operators.ann_index import query_ivf_index
     from retail_datawarehouse_spark.operators.similarity import (
+        IVF_NPROBE,
         N_QUERIES,
         TOP_K,
         cosine_col,
     )
-    from retail_datawarehouse_spark.registry import catalog
     from retail_datawarehouse_spark.sources.readers import load_table
     from pyspark.sql import functions as F
 
-    res = builder("q_ann_ivf_probed")(spark, sf_dir)
+    idx, queries = fixture_ivf_index
+    res = query_ivf_index(queries, idx, nprobe=IVF_NPROBE)
     rows = res.collect()
     per_query = {}
     for r in rows:
@@ -519,7 +536,7 @@ def test_decontaminate_removes_eval_members_by_content(spark, sf_dir):
     assert all(n >= 1 for n in flagged.values())
 
 
-def test_ivf_recall_floor_on_fixture(spark, sf_dir):
+def test_ivf_recall_floor_on_fixture(spark, sf_dir, fixture_ivf_index):
     """Recall quality gate for the IVF serving config (round-2 verdict
     #7): nprobe=K proves completeness, but nothing bounded recall at
     partial probe depths. The fixture embeddings are isotropic random
@@ -531,8 +548,9 @@ def test_ivf_recall_floor_on_fixture(spark, sf_dir):
 
     Measured on sf0.001: 0.4667 / 0.7667 / 0.9667 at nprobe 4/8/12
     (random baselines 0.25 / 0.50 / 0.75)."""
-    from retail_datawarehouse_spark.operators.similarity import ivf_topk
+    from retail_datawarehouse_spark.operators.ann_index import query_ivf_index
 
+    idx, queries = fixture_ivf_index
     exact = builder("q_ann_cosine_topk")(spark, sf_dir).collect()
     truth = {}
     for r in exact:
@@ -542,7 +560,7 @@ def test_ivf_recall_floor_on_fixture(spark, sf_dir):
     means = []
     for nprobe, floor in floors.items():
         got = {}
-        for r in ivf_topk(spark, sf_dir, nprobe=nprobe).collect():
+        for r in query_ivf_index(queries, idx, nprobe=nprobe).collect():
             got.setdefault(r.query_id, set()).add(r.candidate_id)
         recalls = [
             len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
@@ -582,22 +600,22 @@ def test_adc_recall_floor_vs_exact(spark, sf_dir):
 def test_ann_suite_memoizes_persisted_frames(spark, sf_correctness_dir):
     """r7 verdict #3 (the r5 ADVICE cache-accrual class): repeat
     ``q_ann_topk_suite`` invocations in one session must reuse ONE
-    registration of the shared frames (corpus, IVF assignment,
-    centroids, PQ codes), not accrue a new persisted set per call —
-    and an external ``clearCache`` (bench.py does this between reps)
-    must be healed by re-persisting the SAME memo entry, still
+    memo entry (the persisted corpus, the stored indexes and their
+    handles), not accrue a new persisted set or a new index build per
+    call — and an external ``clearCache`` (bench.py does this between
+    reps) must be healed by re-persisting the SAME memo entry, still
     correct."""
     from retail_datawarehouse_spark.operators.similarity import (
-        _SUITE_SHARED_CACHE,
+        _ANN_SUITE_CACHE,
         q_ann_topk_suite,
     )
 
     jsc_sc = spark.sparkContext._jsc.sc()
     n0 = q_ann_topk_suite(spark, sf_correctness_dir).count()
     persisted_after_first = jsc_sc.getPersistentRDDs().size()
-    cache_entries = len(_SUITE_SHARED_CACHE)
+    cache_entries = len(_ANN_SUITE_CACHE)
     key = (spark.sparkContext.applicationId, sf_correctness_dir)
-    frames_first = {n: id(df) for n, df in _SUITE_SHARED_CACHE[key].items()}
+    memo_first = {n: id(v) for n, v in _ANN_SUITE_CACHE[key].items()}
     assert q_ann_topk_suite(spark, sf_correctness_dir).count() == n0
     # Spark's ContextCleaner asynchronously unpersists frames whose
     # Python references were GC'd by EARLIER tests in a long session,
@@ -606,20 +624,21 @@ def test_ann_suite_memoizes_persisted_frames(spark, sf_correctness_dir):
     # invocation registering new frames), plus identity: the second
     # call served the exact same memoized objects.
     assert jsc_sc.getPersistentRDDs().size() <= persisted_after_first
-    assert len(_SUITE_SHARED_CACHE) == cache_entries
+    assert len(_ANN_SUITE_CACHE) == cache_entries
     assert {
-        n: id(df) for n, df in _SUITE_SHARED_CACHE[key].items()
-    } == frames_first
-    # external clearCache unregisters the frames; the memo re-persists
-    # rather than running the suite uncached or rebuilding the entry
+        n: id(v) for n, v in _ANN_SUITE_CACHE[key].items()
+    } == memo_first
+    # external clearCache unregisters the corpus; the memo re-persists
+    # it rather than running the suite uncached or rebuilding the entry
     spark.catalog.clearCache()
     assert q_ann_topk_suite(spark, sf_correctness_dir).count() == n0
     key = (spark.sparkContext.applicationId, sf_correctness_dir)
-    shared = _SUITE_SHARED_CACHE[key]
-    for name, df in shared.items():
-        lvl = df.storageLevel
-        assert lvl.useMemory or lvl.useDisk, name
-    assert len(_SUITE_SHARED_CACHE) == cache_entries
+    lvl = _ANN_SUITE_CACHE[key]["corpus"].storageLevel
+    assert lvl.useMemory or lvl.useDisk
+    assert {
+        n: id(v) for n, v in _ANN_SUITE_CACHE[key].items()
+    } == memo_first
+    assert len(_ANN_SUITE_CACHE) == cache_entries
 
 
 def test_lsh_dup_recall_floor(spark):
@@ -1496,63 +1515,35 @@ def test_pq_reconstruction_and_planted_recall(spark, sf_correctness_dir):
     corpus.unpersist()
 
 
-def test_ivfpq_full_probe_equals_full_scan(spark, sf_correctness_dir):
-    """nprobe=K degrades the composed IVF×PQ path to the full ADC scan
-    row-for-row: IVF cells are a complete disjoint cover, so every
-    candidate is scored exactly once with the same reconstruction fold
-    — the same argument the stored-IVF full-probe test makes, now for
-    the PQ-coded form (r6 verdict #1's exactness fallback)."""
-    from retail_datawarehouse_spark.operators.similarity import (
-        IVF_CELLS,
-        _ann_corpus,
-        _ann_queries,
-        _ivfpq_topk,
-        _pq_topk,
-    )
-    from retail_datawarehouse_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_correctness_dir, "embeddings")
-    corpus = _ann_corpus(emb).persist()
-    queries = _ann_queries(emb)
-    full_scan = {
-        (r.query_id, r.rank): (r.candidate_id, r.cosine)
-        for r in _pq_topk(queries, corpus).collect()
-    }
-    full_probe = {
-        (r.query_id, r.rank): (r.candidate_id, r.cosine)
-        for r in _ivfpq_topk(queries, corpus, nprobe=IVF_CELLS).collect()
-    }
-    assert full_probe == full_scan
-    corpus.unpersist()
-
-
-def test_ivfpq_pruned_planted_recall(spark, sf_correctness_dir):
+def test_ivfpq_pruned_planted_recall(spark, sf_correctness_dir, tmp_path):
     """Under the PRUNED serving configuration (nprobe=4 of 16), a
     planted scale-invariant near-copy still retrieves its original at
-    rank 1: cosine cell routing is scale-invariant, so the copy probes
-    its original's cell first — pruning cannot lose a true near-dup.
-    This is the recall contract the candidate-generation use case
-    needs from the composed index."""
+    rank 1 from the stored raw-PQ index (the suite's 'ivfpq' tier):
+    cosine cell routing is scale-invariant, so the copy probes its
+    original's cell first — pruning cannot lose a true near-dup. This
+    is the recall contract the candidate-generation use case needs
+    from the composed index."""
     from pyspark.sql import functions as F
 
-    from retail_datawarehouse_spark.operators.similarity import (
-        _ann_corpus,
-        _ivfpq_topk,
-        norm2_col,
-    )
-    from retail_datawarehouse_spark.sources.readers import load_table
+    from tests.builders import ann_vectors
 
-    emb = load_table(spark, sf_correctness_dir, "embeddings")
-    corpus = _ann_corpus(emb).persist()
-    q = (
-        corpus.filter(F.col("candidate_id") % 100 == 0)
-        .select(
-            F.col("candidate_id").alias("query_id"),
-            F.expr("transform(c_emb, x -> x * 1.5f)").alias("q_emb"),
-        )
-        .withColumn("q_n2", norm2_col("q_emb"))
+    from retail_datawarehouse_spark.operators.ann_index import (
+        query_ivf_index,
+        store_ivf_index,
     )
-    top = _ivfpq_topk(q, corpus).filter("rank = 1").collect()
+    from retail_datawarehouse_spark.operators.similarity import IVF_NPROBE
+
+    corpus, _ = ann_vectors(spark, sf_correctness_dir)
+    idx = str(tmp_path / "ivfpq_raw")
+    store_ivf_index(corpus, idx, cells="fixture", pq=True, pq_mode="raw")
+    q = corpus.filter(F.col("id") % 100 == 0).select(
+        "id", F.expr("transform(emb, x -> x * 1.5f)").alias("emb")
+    )
+    top = (
+        query_ivf_index(q, idx, nprobe=IVF_NPROBE, pq=True)
+        .filter("rank = 1")
+        .collect()
+    )
     assert top, "no planted queries"
     misses = [
         (r.query_id, r.candidate_id)
@@ -1560,7 +1551,6 @@ def test_ivfpq_pruned_planted_recall(spark, sf_correctness_dir):
         if r.candidate_id != r.query_id
     ]
     assert not misses, misses
-    corpus.unpersist()
 
 
 def test_component_split_eliminates_leakage(spark, sf_correctness_dir):

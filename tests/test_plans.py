@@ -191,14 +191,25 @@ def test_scd2_merge_close_pass_broadcasts_the_change_batch(spark, sf_dir):
     assert plan.count("SortMergeJoin") <= 1, plan[:2000]
 
 
-def test_ivf_candidate_join_is_hash_on_cell(spark, sf_dir):
+def test_ivf_candidate_join_is_hash_on_cell(spark, sf_dir, tmp_path):
     """The IVF search join (probes × inverted file) must be a hash
     equi-join on the cell id. The only nested-loop joins allowed are
     the K-row centroid scoring cross joins — candidate scoring must
-    never nested-loop over the corpus."""
+    never nested-loop over the corpus. Pinned on a float query of a
+    stored fixture index (the suite's 'ivf' serving configuration)."""
+    from tests.builders import ann_vectors
+
+    from retail_datawarehouse_spark.operators.ann_index import (
+        query_ivf_index,
+        store_ivf_index,
+    )
+    from retail_datawarehouse_spark.operators.similarity import IVF_NPROBE
     from retail_datawarehouse_spark.plans.explain import formatted_plan
 
-    df = builder("q_ann_ivf_probed")(spark, sf_dir)
+    corpus, queries = ann_vectors(spark, sf_dir)
+    idx = str(tmp_path / "ivf")
+    store_ivf_index(corpus, idx, cells="fixture")
+    df = query_ivf_index(queries, idx, nprobe=IVF_NPROBE)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan
 
