@@ -19,7 +19,9 @@ varies by storage is only HOW those ~10 small operations execute:
   proxy the tests use); ``ivf_index_stats(filesystem=)`` wraps a bare
   filesystem in this class. ``spark_path_fn`` maps coordinator paths
   to paths Spark's Hadoop reader resolves (identity-under-root for
-  SubTree; an ``s3a://``-prefixer on a real object store).
+  SubTree; an ``s3a://``-prefixer on a real object store). The mapping
+  runs one way only: the protocol lists files through the coordinator
+  and hands Spark the mapped paths, and never maps a Spark path back.
 
 Honesty on object-store semantics, stated here rather than discovered
 in production: pyarrow exposes no create-exclusive, so
@@ -201,17 +203,9 @@ class PosixCoordinator:
             os.close(fd)
             os.unlink(path)
 
-    # -- coordinator path <-> Spark path ----------------------------
+    # -- coordinator path -> Spark path -----------------------------
     def spark_path(self, path: str) -> str:
         return path
-
-    def from_spark_path(self, uri: str) -> str:
-        """'file:///x/y' (DataFrame.inputFiles) → '/x/y'."""
-        if uri.startswith("file://"):
-            return uri[len("file://") :]
-        if uri.startswith("file:"):
-            return uri[len("file:") :]
-        return uri
 
 
 class ArrowFsCoordinator(PosixCoordinator):
@@ -447,21 +441,6 @@ class ArrowFsCoordinator(PosixCoordinator):
         if self._spark_path_fn is None:
             return path
         return self._spark_path_fn(path)
-
-    def from_spark_path(self, uri: str) -> str:
-        local = PosixCoordinator.from_spark_path(self, uri)
-        if self._spark_path_fn is None:
-            return local
-        # invert the mapping by probing the index root prefix: the fn
-        # is required to be a pure prefix-join (SubTree root or an
-        # s3a:// scheme prefix), so stripping the mapped-empty prefix
-        # recovers the coordinator path.
-        prefix = PosixCoordinator.from_spark_path(
-            self, self._spark_path_fn("")
-        )
-        if local.startswith(prefix):
-            return local[len(prefix) :].lstrip("/")
-        return local
 
 
 class TokenLeaseCoordinator(ArrowFsCoordinator):

@@ -427,22 +427,6 @@ def _check_lock_mutual_exclusion_threads(co, root):
     )
 
 
-def _check_spark_path_inversion(co, root):
-    path = f"{root}/idx/cells/cell=3/part-0.parquet"
-    mapped = co.spark_path(path)
-    # DataFrame.inputFiles returns file: URIs on local stores; the
-    # coordinator must recover its own path from either form
-    assert co.from_spark_path(mapped) == path, (
-        "from_spark_path must invert spark_path"
-    )
-    assert co.from_spark_path(f"file://{mapped}") == path or not str(
-        mapped
-    ).startswith("/"), (
-        "from_spark_path must strip a file:// scheme off a mapped "
-        "absolute path"
-    )
-
-
 CONTRACT_CHECKS = [
     ("text_roundtrip", _check_text_roundtrip),
     ("makedirs_collision", _check_makedirs_collision),
@@ -455,7 +439,6 @@ CONTRACT_CHECKS = [
     ("pointer_commit", _check_pointer_commit),
     ("lock_blocks_and_releases", _check_lock_blocks_and_releases),
     ("lock_mutual_exclusion_threads", _check_lock_mutual_exclusion_threads),
-    ("spark_path_inversion", _check_spark_path_inversion),
     ("lease_expiry_on_injected_clock", _check_lease_expiry_on_injected_clock),
 ]
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 def _spark_path(root: str):
     def fn(p: str) -> str:
-        return f"{root}/{p}" if p else root
+        return f"{root}/{p}"
 
     return fn
 

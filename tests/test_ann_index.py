@@ -918,7 +918,7 @@ def test_pq_rerank_recovers_exact_ranks_from_adc_shortlist(
 
 
 def test_append_racing_compaction_is_folded_forward(
-    spark, sf_correctness_dir, tmp_path
+    spark, sf_correctness_dir, tmp_path, monkeypatch
 ):
     """r8 verdict "what's wrong" #1: an append that lands AFTER the
     compactor's snapshot read but BEFORE its pointer flip must not be
@@ -927,6 +927,7 @@ def test_append_racing_compaction_is_folded_forward(
     the old generation and folds the late files into gen-1 — pinned by
     full-probe equality against brute force over base+batch, served
     from the NEW generation."""
+    from retail_datawarehouse_spark.operators import ann_index as ai
     from retail_datawarehouse_spark.operators.ann_index import (
         _cells_path,
         compact_ivf_index,
@@ -938,9 +939,11 @@ def test_append_racing_compaction_is_folded_forward(
     idx = str(tmp_path / "ivf_race")
     store_ivf_index(base, idx, cells=IVF_CELLS)
 
-    compact_ivf_index(
-        spark, idx, _before_commit=lambda: append_to_ivf_index(batch, idx)
-    )
+    with monkeypatch.context() as m:
+        m.setattr(
+            ai, "_before_commit", lambda: append_to_ivf_index(batch, idx)
+        )
+        compact_ivf_index(spark, idx)
     assert _cells_path(idx) == f"{idx}/gen-1/cells"
     batch_ids = {r.id for r in batch.select("id").collect()}
     served_ids = {
@@ -1292,7 +1295,7 @@ def test_threaded_append_during_compaction_loses_nothing(
 
 
 def test_rebuild_superseding_compaction_makes_compactor_abort(
-    spark, sf_correctness_dir, tmp_path
+    spark, sf_correctness_dir, tmp_path, monkeypatch
 ):
     """Maintainer-vs-maintainer race, deterministic interleaving (r10;
     ADVICE r9 #1): a compaction's bulk rewrite is overtaken by a
@@ -1307,6 +1310,7 @@ def test_rebuild_superseding_compaction_makes_compactor_abort(
     reservation is live, ``reap_ivf_generations`` must skip it."""
     import os as _os
 
+    from retail_datawarehouse_spark.operators import ann_index as ai
     from retail_datawarehouse_spark.operators.ann_index import (
         ConcurrentMaintenanceError,
         _cells_generation,
@@ -1320,7 +1324,9 @@ def test_rebuild_superseding_compaction_makes_compactor_abort(
     staged = {}
 
     def rebuild_then_probe_reap():
-        # the compactor has bulk-written its reservation by now
+        # the compactor has bulk-written its reservation by now; the
+        # rebuild's own pass through the seam must not recurse
+        monkeypatch.undo()
         staged["dirs"] = sorted(glob.glob(f"{idx}/gen-*"))
         store_ivf_index(corpus, idx, cells=8)  # commits its own gen
         staged["committed"] = _cells_generation(idx)
@@ -1328,8 +1334,9 @@ def test_rebuild_superseding_compaction_makes_compactor_abort(
         # marker-bearing and must survive; the flat gen-0 is reclaimed
         staged["reaped"] = reap_ivf_generations(idx)
 
+    monkeypatch.setattr(ai, "_before_commit", rebuild_then_probe_reap)
     with pytest.raises(ConcurrentMaintenanceError):
-        compact_ivf_index(spark, idx, _before_commit=rebuild_then_probe_reap)
+        compact_ivf_index(spark, idx)
     # the two maintainers never shared a generation directory
     assert len(staged["dirs"]) == 1  # compactor's reservation
     compactor_dir = staged["dirs"][0]
@@ -2466,6 +2473,128 @@ def test_build_knob_conflicts_raise_before_reserving_a_generation(
     assert glob.glob(f"{idx2}/gen-*") == [], "orphaned staging generation"
 
 
+def _run_maintainer(name, spark, idx, corpus):
+    """Run one of the three generation rewriters over ``idx``;
+    store-over-existing rebuilds from ``corpus``."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        compact_ivf_index,
+        rebuild_ivf_index,
+    )
+
+    if name == "store":
+        store_ivf_index(corpus, idx, cells=IVF_CELLS)
+    elif name == "rebuild":
+        rebuild_ivf_index(spark, idx, cells=IVF_CELLS)
+    else:
+        compact_ivf_index(spark, idx)
+
+
+MAINTAINERS = ["store", "rebuild", "compact"]
+
+
+@pytest.mark.parametrize("maintainer", MAINTAINERS)
+def test_failed_rewrite_removes_its_reservation(
+    spark, sf_correctness_dir, tmp_path, monkeypatch, maintainer
+):
+    """A maintainer whose bulk write raises after the generation is
+    reserved removes the reservation — here holding a fully written
+    cells table — and re-raises: no ``gen-*`` directory is left for
+    ``reap`` to skip, ``CURRENT`` is unchanged and the index serves as
+    before."""
+    from retail_datawarehouse_spark.operators import ann_index as ai
+
+    corpus, queries = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "fail_idx")
+    store_ivf_index(corpus, idx, cells=IVF_CELLS, pq=True)
+    ai.compact_ivf_index(spark, idx)
+    before = _rows(query_ivf_index(queries, idx, nprobe="all"))
+    write_cells = ai._write_cells
+
+    def write_then_fail(rows, root, co, mode="overwrite"):
+        write_cells(rows, root, co, mode)
+        raise RuntimeError("injected bulk-write failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(ai, "_write_cells", write_then_fail)
+        with pytest.raises(RuntimeError, match="injected"):
+            _run_maintainer(maintainer, spark, idx, corpus)
+    assert glob.glob(f"{idx}/gen-*") == [f"{idx}/gen-1"]
+    assert ai._cells_generation(idx) == 1
+    assert _rows(query_ivf_index(queries, idx, nprobe="all")) == before
+
+
+@pytest.mark.parametrize("maintainer", MAINTAINERS)
+def test_append_and_delete_racing_each_maintainer_are_kept(
+    spark, sf_correctness_dir, tmp_path, monkeypatch, maintainer
+):
+    """An append and a delete landing at the seam between a
+    maintainer's bulk write and its commit window: the appended rows
+    are in the new generation exactly once, the deleted id is not
+    served, and its tombstone is in the new generation's sidecar."""
+    import pyarrow.parquet as pq
+
+    from retail_datawarehouse_spark.operators import ann_index as ai
+    from retail_datawarehouse_spark.operators.ann_index import (
+        _cells_generation,
+        delete_from_ivf_index,
+    )
+
+    corpus, queries = _fixture(spark, sf_correctness_dir)
+    batch = corpus.filter(F.col("id") % 17 == 0)
+    base = corpus.filter(F.col("id") % 17 != 0)
+    idx = str(tmp_path / "race_idx")
+    store_ivf_index(base, idx, cells=IVF_CELLS)
+    victim = base.agg(F.min("id")).first()[0]
+
+    def race():
+        append_to_ivf_index(batch, idx)
+        delete_from_ivf_index(
+            spark.createDataFrame([(victim,)], "id long"), idx
+        )
+
+    with monkeypatch.context() as m:
+        m.setattr(ai, "_before_commit", race)
+        _run_maintainer(maintainer, spark, idx, base)
+    assert _cells_generation(idx) == 1
+    batch_ids = {r.id for r in batch.select("id").collect()}
+    counts = (
+        spark.read.parquet(f"{idx}/gen-1/cells")
+        .filter(F.col("id").isin(*batch_ids))
+        .groupBy("id")
+        .count()
+        .collect()
+    )
+    assert {r.id: r["count"] for r in counts} == dict.fromkeys(batch_ids, 1)
+    tombstoned = pq.read_table(f"{idx}/gen-1/tombstones").column("id")
+    assert victim in tombstoned.to_pylist()
+    self_probe = query_ivf_index(
+        corpus.filter(F.col("id") == victim), idx, nprobe="all"
+    )
+    assert victim not in {r.candidate_id for r in self_probe.collect()}
+    live = corpus.filter(F.col("id") != victim)
+    got = query_ivf_index(queries, idx, nprobe="all")
+    assert _rows(got) == _rows(_brute_force(live, queries))
+
+
+def test_stored_index_has_one_file_per_cell(
+    spark, sf_correctness_dir, tmp_path
+):
+    """The build writes the cells table through the same repartitioned
+    writer as compaction: a corpus spread over 8 partitions still lands
+    as one file per cell, so a default ``maintain_ivf_index`` has no
+    small files to compact on a fresh index."""
+    from retail_datawarehouse_spark.operators.ann_index import (
+        ivf_index_stats,
+    )
+
+    corpus, _ = _fixture(spark, sf_correctness_dir)
+    idx = str(tmp_path / "one_file_idx")
+    store_ivf_index(corpus.repartition(8), idx, cells=IVF_CELLS, pq=True)
+    panel = ivf_index_stats(spark, idx).collect()
+    assert len(panel) > 1
+    assert [r.n_files for r in panel] == [1] * len(panel)
+
+
 def test_stats_rejects_conflicting_filesystem_and_coordinator(
     spark, sf_correctness_dir, tmp_path
 ):
@@ -2485,7 +2614,7 @@ def test_stats_rejects_conflicting_filesystem_and_coordinator(
     root = str(tmp_path / "conflict_idx")
     fs = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
     co = ArrowFsCoordinator(
-        fs, spark_path_fn=lambda p: f"{tmp_path}/{p}" if p else str(tmp_path)
+        fs, spark_path_fn=lambda p: f"{tmp_path}/{p}"
     )
     corpus, _ = _fixture(spark, sf_correctness_dir)
     store_ivf_index(corpus, "conflict_idx", cells=IVF_CELLS, coordinator=co)

@@ -45,7 +45,7 @@ def _subtree_co(tmp_path):
     root = str(tmp_path)
     fs = pafs.SubTreeFileSystem(root, pafs.LocalFileSystem())
     return ArrowFsCoordinator(
-        fs, spark_path_fn=lambda p: f"{root}/{p}" if p else root
+        fs, spark_path_fn=lambda p: f"{root}/{p}"
     )
 
 
@@ -261,7 +261,7 @@ def _lease_co(tmp_path, **kw):
     fs = pafs.SubTreeFileSystem(root, pafs.LocalFileSystem())
     kw.setdefault("settle", 0.01)
     return TokenLeaseCoordinator(
-        fs, spark_path_fn=lambda p: f"{root}/{p}" if p else root, **kw
+        fs, spark_path_fn=lambda p: f"{root}/{p}", **kw
     )
 
 
@@ -388,7 +388,7 @@ def test_contract_kit_red_on_broken_coordinators(tmp_path):
     os.makedirs(root)
     immortal = NeverExpires(
         pafs.SubTreeFileSystem(root, pafs.LocalFileSystem()),
-        spark_path_fn=lambda p: f"{root}/{p}" if p else root,
+        spark_path_fn=lambda p: f"{root}/{p}",
         lease_ttl=600.0,
         settle=0.01,
     )

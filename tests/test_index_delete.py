@@ -16,6 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from retail_datawarehouse_spark.operators import ann_index
 from retail_datawarehouse_spark.operators.ann_index import (
     admit_novel_vectors,
     append_to_ivf_index,
@@ -282,7 +283,7 @@ def test_null_ids_in_a_delete_request_are_dropped(
 
 
 def test_late_delete_during_compaction_carries_forward(
-    spark, sf_correctness_dir, tmp_path
+    spark, sf_correctness_dir, tmp_path, monkeypatch
 ):
     """A delete landing between compaction's rewrite and its commit
     window was not in the rewrite's filter — the commit carries the
@@ -298,7 +299,9 @@ def test_late_delete_during_compaction_carries_forward(
     def racing_delete():
         delete_from_ivf_index(_ids_df(spark, [late]), idx)
 
-    compact_ivf_index(spark, idx, _before_commit=racing_delete)
+    with monkeypatch.context() as m:
+        m.setattr(ann_index, "_before_commit", racing_delete)
+        compact_ivf_index(spark, idx)
     # early: physically dropped by the rewrite; late: carried forward
     raw = spark.read.parquet(f"{idx}/gen-1/cells")
     assert raw.filter(F.col("id") == early).count() == 0
@@ -379,7 +382,7 @@ def test_delete_lifecycle_byte_identical_through_arrowfs_coordinator(
     root = str(tmp_path)
     fs = pafs.SubTreeFileSystem(root, pafs.LocalFileSystem())
     co = ArrowFsCoordinator(
-        fs, spark_path_fn=lambda p: f"{root}/{p}" if p else root
+        fs, spark_path_fn=lambda p: f"{root}/{p}"
     )
     corpus, queries = _fixture(spark, sf_correctness_dir)
     store_ivf_index(corpus, "sub_idx", cells=IVF_CELLS, coordinator=co)

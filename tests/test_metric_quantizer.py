@@ -15,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from retail_datawarehouse_spark.operators.ann_index import (
-    _index_metric,
     append_to_ivf_index,
     open_ivf_index,
     query_ivf_index,
@@ -92,7 +91,7 @@ def test_metric_tag_inherited_by_append_and_rebuild(spark, tmp_path):
     idx = str(tmp_path / "idx_l2")
     store_ivf_index(cdf, idx, cells="auto", metric="l2")
     h = open_ivf_index(spark, idx, persist=False)
-    assert _index_metric(h.centroids) == "l2"
+    assert h.state.metric == "l2"
     # append an exact copy of ball member 150; L2 assignment puts the
     # copy in the SAME cell as its twin (distance 0)
     twin = spark.read.parquet(h.cells_path).filter(F.col("id") == 150)
@@ -111,7 +110,7 @@ def test_metric_tag_inherited_by_append_and_rebuild(spark, tmp_path):
     rebuild_ivf_index(spark, idx)
     h2 = open_ivf_index(spark, idx, persist=False)
     assert h2.gen > h.gen
-    assert _index_metric(h2.centroids) == "l2"
+    assert h2.state.metric == "l2"
     # the appended copy still rides with its twin after retraining
     cells2 = {
         r.id: r.cell
@@ -138,7 +137,7 @@ def test_metric_store_validation(spark, tmp_path):
     store_ivf_index(cdf, idx, cells=4)
     h = open_ivf_index(spark, idx, persist=False)
     assert "_metric" not in h.centroids.columns
-    assert _index_metric(h.centroids) == "cosine"
+    assert h.state.metric == "cosine"
 
 
 def test_metric_training_no_regression_on_concentrated_corpus(spark):
